@@ -99,9 +99,9 @@ def query(
 #    rows stale; set computed by tools/changed_queries.py — the r12
 #    ad-hoc AST call-closure, promoted to a tracked tool — seeded
 #    with the edited functions kmeans_lloyd, kmeans_lloyd_grouped,
-#    _estep_strategy, _round9_half_up, connected_components,
-#    _semdedup_collapse, _semdedup_multilevel, semdedup_auto,
-#    temperature_mixture, lr_train_surrogate):
+#    the E-step strategy selector (since deleted), _round9_half_up,
+#    connected_components, _semdedup_collapse, _semdedup_multilevel,
+#    semdedup_auto, temperature_mixture, lr_train_surrogate):
 #    - the ONE-PASS grouped Lloyd trainer (all iterations inside one
 #      cogroup; means by the Python repr-based round9 twin) + the
 #      arrow-always E-step strategy + the repr-based _round9_half_up

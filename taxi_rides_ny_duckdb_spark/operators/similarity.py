@@ -28,33 +28,22 @@ from ..session import ensure_min_partitions
 from ..cache import scoped_persist
 
 
-# ── E-step strategy (r11 crossover, RE-MEASURED r13: arrow always) ──
+# ── E-step physical form: assign="auto" means arrow (r13 grid) ──
 # The expr and arrow E-steps are pinned bit-equal (scaled-int64
-# argmin), so the physical choice is pure cost physics. The r11/r12
-# rule ran expr when k ≤ 32 AND rows ≤ 2 000, on the theory that the
-# arrow path pays a fixed Python-worker spin-up the tiny-corpus regime
-# can't amortize. r13 re-measured both paths WARM (worker reuse on, as
-# in any real session — bench warms one pandas_udf stage up front, and
-# every tower query's collapse runs applyInPandas anyway, so the
-# spin-up is paid regardless of this choice), same session, job-group
-# scoped, n×k grid spanning the old boundary:
+# argmin), so the choice is pure cost. r13 measured both paths WARM
+# (worker reuse on, same session, job-group scoped) over an n×k grid
+# spanning the old expr bound (k ≤ 32 and rows ≤ 2 000):
 #   n=500  k=2  expr 1.74 s/10 jobs   arrow 1.21 s/6 jobs
 #   n=500  k=8  expr 1.52 s/10 jobs   arrow 0.92 s/6 jobs
 #   n=2000 k=8  expr 2.09 s/10 jobs   arrow 1.04 s/6 jobs
 #   n=2000 k=23 expr 3.55 s/10 jobs   arrow 1.11 s/6 jobs
-# Arrow wins EVERYWHERE, including the smallest contract regime the
-# expr bound existed to protect: the expr path's exploded (id, j, x)
-# cache + two shuffled aggregations per iteration cost ~10 AQE stage
-# jobs (~0.2-0.4 s fixed overhead each) against arrow's shuffle-free
-# mapInPandas-collect (~6 jobs), and above k≈16 its generated code
-# blows the 64 KB Janino method limit and falls back to interpreted.
-# The old rule's anchors were cold-session measurements — the regime
-# never occurs inside a warmed suite. 'auto' therefore always picks
-# arrow; the expr form remains explicitly selectable (assign="expr")
-# as the SQL-oracle-shaped twin the bit-equality tests pin against.
-# BOX ASSUMPTION: re-measure the grid if worker reuse is disabled or
-# the Arrow batch path changes.
-_EXPR_ESTEP_MAX_K = 32  # plan bound for EXPLICIT assign="expr" callers
+# Arrow won every cell: the expr path's exploded (id, j, x) cache and
+# two shuffled aggregations per iteration cost ~10 AQE stage jobs
+# against arrow's shuffle-free mapInPandas-collect (~6 jobs), and above
+# k≈16 its generated code blows the 64 KB Janino method limit. The expr
+# form stays selectable (assign="expr") as the SQL-shaped reference the
+# bit-equality tests pin against. BOX ASSUMPTION: re-measure the grid
+# if worker reuse is disabled or the Arrow batch path changes.
 
 # ── fused single-task Lloyd gate (r13 optimization round) ──
 # Below these bounds the whole training loop runs INSIDE one cogroup
@@ -75,23 +64,13 @@ _EXPR_ESTEP_MAX_K = 32  # plan bound for EXPLICIT assign="expr" callers
 # corpus through one worker, so the distributed path keeps the win and
 # the gate stays off. BOX ASSUMPTION: single-core numpy throughput
 # ~1 GFLOP/s on the blocked E-step; re-measure if the kernel or the
-# worker-reuse regime changes. The arithmetic is the verbatim
-# ``kmeans_lloyd_grouped`` kernel — bit-equal to BOTH distributed
-# E-step forms (pinned by tests), so the gate changes cost only.
+# worker-reuse regime changes. The arithmetic is the shared in-task
+# kernels below (``_nearest_np``, ``_mstep_sums_np``, ``_lloyd_np``)
+# that the distributed Arrow E-/M-steps run too — bit-equal to BOTH
+# distributed E-step forms (pinned by tests), so the gate changes cost
+# only.
 _FUSED_LLOYD_MAX_ROWS = 50_000
 _FUSED_LLOYD_MAX_CELLS = 2_000_000
-
-
-def _estep_strategy(
-    n_rows: int, k: int, max_expr_k: int = _EXPR_ESTEP_MAX_K
-) -> str:
-    """Pick the E-step physical form for ``assign='auto'`` — always
-    ``'arrow'`` since the r13 warm-regime re-measurement (module note
-    above: arrow won every cell of the n×k grid, including the tiny
-    contract sizes the old expr bound existed for). The signature
-    keeps the cost-model inputs so a future re-measurement can
-    reintroduce a data-dependent rule without touching callers."""
-    return "arrow"
 
 
 def _arrow_vec_col(df: DataFrame, vec_col: str) -> Column:
@@ -146,6 +125,38 @@ def _vec_matrix(col, dim: int):
                     f"row {pos} (expected >= {dim})"
                 ) from None
         raise
+
+
+def _codes_matrix(pdf, m_sub: int, ksub: int, who: str):
+    """(n, m_sub) int64 code matrix from an Arrow-delivered ``codes``
+    pandas column, validated for the ADC LUT gather: every row must
+    hold exactly ``m_sub`` codes in [0, ksub). A NULL row, a NULL code
+    (Arrow delivers it as NaN in a float array), the wrong arity or an
+    out-of-range code all raise one named ValueError — the
+    ``_vec_matrix`` fail-fast convention — where numpy would raise an
+    opaque shape error or the gather would read a wrong LUT cell."""
+    import numpy as np
+
+    rows = list(pdf["codes"])
+    if not rows:
+        return np.zeros((0, m_sub), dtype=np.int64)
+    try:
+        # via float64: NULL codes stay visible as NaN, and every code
+        # below 2⁵³ converts exactly
+        cm = np.asarray(rows, dtype=np.float64)
+    except (ValueError, TypeError):  # a NULL row or ragged arity
+        cm = None
+    if (
+        cm is None
+        or cm.ndim != 2
+        or cm.shape[1] != m_sub
+        or not ((cm >= 0) & (cm < ksub)).all()  # NaN fails both
+    ):
+        raise ValueError(
+            f"{who}: malformed codes batch (expected {m_sub} non-NULL "
+            f"codes per row in [0, {ksub}))"
+        )
+    return cm.astype(np.int64)
 
 
 def _round_half_away_nonneg_np(v):
@@ -239,6 +250,147 @@ def _round9_half_up_np(v):
         for i in idx:
             out[i] = _round9_half_up(float(vals[i]))
     return out
+
+
+def _round_dp_np(vals, dp: int):
+    """Numpy twin of engine ``F.round(x, dp)`` over a 1-D float64
+    array: the vectorized ``_round9_half_up_np`` at dp = 9, else the
+    scalar HALF_UP quantize of the shortest repr, which is what both
+    engines round at fractional scales."""
+    import numpy as np
+
+    if dp == 9:
+        return _round9_half_up_np(vals)
+    from decimal import ROUND_HALF_UP, Decimal
+
+    q = Decimal(1).scaleb(-dp)
+    return np.array(
+        [
+            float(Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP))
+            for x in vals
+        ],
+        dtype=np.float64,
+    )
+
+
+# ── engine-exact k-means kernels ──
+# One copy of each, shared by every in-task Lloyd path (the fused
+# gates, the grouped trainers, the Arrow E-/M-steps, PQ encoding). The
+# distance is the house scaled-integer metric: per-term round(t²·10¹²)
+# exact half-away, summed as int64 — integer addition is associative,
+# so numpy's summation order equals the engine fold and the DuckDB
+# oracle exactly. M-step addends are round(x·10¹²) int64, and means go
+# through the 9dp HALF_UP twin.
+
+
+def _check_scaled_range(dim: int, max_x: float, max_c0: float) -> None:
+    """Overflow guard of the scaled-integer distance: every centroid
+    any Lloyd iteration can produce is a mean of data coordinates, so
+    |t| ≤ max|x| + max(max|x|, max|c0|) bounds every iteration's terms,
+    and dim · (max|t|)² · 10¹² < 2⁶² (one bit of headroom under the
+    int64 line) guarantees no per-vector distance sum can wrap —
+    Spark's non-ANSI LONG sum wraps silently where DuckDB raises.
+    Unit-scale embeddings pass with ~10⁴× margin; unnormalized feature
+    vectors with |coord| ≳ 10³ at dim 64 raise with guidance."""
+    max_t = max_x + max(max_x, max_c0)
+    if dim * (max_t * max_t) * 1e12 >= float(2**62):
+        raise ValueError(
+            f"kmeans_lloyd: coordinate range too large for the exact "
+            f"scaled-integer distance (max |coord| {max(max_x, max_c0):g} "
+            f"at dim {dim}: dim·(max|t|)²·1e12 ≥ 2⁶², the int64 sum "
+            f"would wrap silently) — pre-scale the vectors (e.g. divide "
+            f"by their max norm) before training"
+        )
+
+
+def _nearest_np(X, C):
+    """Position (int32) of each row of ``X`` in ``C`` under the
+    scaled-integer distance, ties to the LOWER position — within a
+    centroid block by ``argmin``'s first occurrence, across blocks by
+    a strict compare, so an earlier block keeps a tie. Double-blocked
+    (1024-row chunks × 64-centroid chunks) so the b×kc×dim temporary
+    stays ~tens of MB whatever the batch size or k. Callers whose
+    centroids carry ids (``scid``) map the positions through their
+    sorted ids."""
+    import numpy as np
+
+    row_chunk, cent_chunk = 1024, 64
+    best = np.empty(len(X), dtype=np.int32)
+    for r0 in range(0, len(X), row_chunk):
+        xb = X[r0 : r0 + row_chunk]
+        rows = np.arange(len(xb))
+        bd = bi = None
+        for c0 in range(0, len(C), cent_chunk):
+            t = xb[:, None, :] - C[None, c0 : c0 + cent_chunk, :]
+            d = _round_half_away_nonneg_i64(t * t * 1e12).sum(axis=2)
+            ci = d.argmin(axis=1)
+            cd = d[rows, ci]
+            if bd is None:
+                bd, bi = cd, ci + c0
+            else:
+                upd = cd < bd
+                bd = np.where(upd, cd, bd)
+                bi = np.where(upd, ci + c0, bi)
+        best[r0 : r0 + len(xb)] = bi
+    return best
+
+
+def _mstep_sums_np(best, Xi):
+    """M-step statistics of one assignment: the sorted distinct labels
+    ``uc``, their member counts ``npart`` and the per-coordinate int64
+    sums ``S`` of the pre-quantized round(x·10¹²) addends ``Xi`` —
+    exact and order-free, the same integers the SQL aggregate forms
+    produce. Returns ``(uc, npart, S)``."""
+    import numpy as np
+
+    uc, inv = np.unique(best, return_inverse=True)
+    npart = np.bincount(inv)
+    S = np.zeros((len(uc), Xi.shape[1]), dtype=np.int64)
+    np.add.at(S, inv, Xi)
+    return uc, npart, S
+
+
+def _lloyd_np(X, Xi, C, iters: int):
+    """The in-task Lloyd loop: ``iters`` rounds of ``_nearest_np`` +
+    ``_mstep_sums_np``, each assigned centroid becoming the 9dp
+    HALF_UP twin of the engine's double ``s/1e12/n`` and an empty one
+    keeping its previous value. ``C`` (the init) is copied, not
+    modified. Returns ``(C, best, counts)``: the trained centroids,
+    the last iteration's assignment and its per-centroid counts."""
+    import numpy as np
+
+    C = np.array(C, dtype=np.float64)
+    best = np.zeros(0, dtype=np.int32)
+    counts = np.zeros(len(C), dtype=np.int64)
+    for _ in range(iters):
+        best = _nearest_np(X, C)
+        uc, npart, S = _mstep_sums_np(best, Xi)
+        counts = np.zeros(len(C), dtype=np.int64)
+        counts[uc] = npart
+        # int64→double exact under the 2⁵³ envelope; /1e12 then /n are
+        # the engine's own double divisions
+        M = S.astype(np.float64) / 1e12 / npart[:, None]
+        C[uc] = _round9_half_up_np(M.ravel()).reshape(M.shape)
+    return C, best, counts
+
+
+def _next_centroids(cents, stats):
+    """Driver-side finish of a ``kmeans_lloyd`` M-step, shared by both
+    E-step forms: coordinate j of centroid ci becomes
+    ``_round9_half_up(s/1e12/n)`` from its ``stats[(ci, j)] = (s, n)``
+    (Σ round(x·10¹²) and member count), and a coordinate without a
+    statistic — an empty cluster — keeps its previous value."""
+    from .classify import _round9_half_up
+
+    return [
+        [
+            _round9_half_up(float(stats[ci, j][0]) / 1e12 / stats[ci, j][1])
+            if (ci, j) in stats
+            else x
+            for j, x in enumerate(c)
+        ]
+        for ci, c in enumerate(cents)
+    ]
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -818,22 +970,6 @@ def embedding_near_dup_pairs(
     idt = dict(df.dtypes)[id_col]
     schema = f"id_a {idt}, id_b {idt}, cosine_sim double"
 
-    def round_np(vals):
-        if dp == 9:
-            return _round9_half_up_np(vals)
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q = Decimal(1).scaleb(-dp)
-        return np.array(
-            [
-                float(
-                    Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP)
-                )
-                for x in vals
-            ],
-            dtype=np.float64,
-        )
-
     chunk = 512
 
     def fn(pdf):
@@ -876,7 +1012,7 @@ def embedding_near_dup_pairs(
                 ii, jj = np.nonzero(iu[:, None] < ju[None, :])
                 s = sim[ii, jj]
                 if dp is not None:
-                    s = round_np(s)
+                    s = _round_dp_np(s, dp)
                 keep = s >= thr
                 out_a.extend(ids[iu[ii[keep]]])
                 out_b.extend(ids[ju[jj[keep]]])
@@ -1296,37 +1432,12 @@ def hard_negative_mine_fused(
     thr = float(pair_threshold)
     pdp = int(pair_round_dp)
     sdp = int(score_round_dp)
-    margin = thr - 10.0 ** (-pdp)
+    qdp = None if round_dp is None else int(round_dp)
     C = (
         np.asarray([[float(x) for x in c] for c in centroids], dtype=np.float64)
         if centroids is not None
         else None
     )
-
-    def _round_np(dp: int):
-        def f(vals):
-            if dp == 9:
-                return _round9_half_up_np(vals)
-            from decimal import ROUND_HALF_UP, Decimal
-
-            q = Decimal(1).scaleb(-dp)
-            return np.array(
-                [
-                    float(
-                        Decimal(repr(float(x))).quantize(
-                            q, rounding=ROUND_HALF_UP
-                        )
-                    )
-                    for x in vals
-                ],
-                dtype=np.float64,
-            )
-
-        return f
-
-    round_pair = _round_np(pdp)
-    round_score = _round_np(sdp)
-    round_quant = _round_np(int(round_dp)) if round_dp is not None else None
 
     dtypes = dict(df.dtypes)
     idt = dtypes[id_col]
@@ -1348,7 +1459,7 @@ def hard_negative_mine_fused(
             nv += X[:, d] * X[:, d]
         nv = np.sqrt(nv)
         root, _keep = _collapse_cluster_np(
-            ids, X if n >= 2 else None, nv, nv, thr, margin, round_pair
+            ids, X if n >= 2 else None, nv, nv, thr, pdp
         )
         comp = ids[root]
         if C is not None:
@@ -1357,9 +1468,9 @@ def hard_negative_mine_fused(
             for d in range(dim):
                 t = X[:, d : d + 1] - C[:, d][None, :]
                 D += t * t
-            if round_quant is not None:
+            if qdp is not None:
                 for i in range(kc):
-                    D[:, i] = round_quant(D[:, i])
+                    D[:, i] = _round_dp_np(D[:, i], qdp)
             clist = np.where(np.isnan(D), np.inf, D).argmin(axis=1)
         out_q, out_r, out_i, out_s = [], [], [], []
         for qi in np.nonzero(isq)[0]:
@@ -1381,7 +1492,7 @@ def hard_negative_mine_fused(
             for d in range(dim):
                 dot += X[qi, d] * B[:, d]
             ok = (nv[qi] > 0) & (nv[cand] > 0)
-            sc = round_score(
+            sc = _round_dp_np(
                 np.where(
                     ok,
                     np.divide(
@@ -1391,7 +1502,8 @@ def hard_negative_mine_fused(
                         where=ok,
                     ),
                     0.0,
-                )
+                ),
+                sdp,
             )
             order = np.lexsort((ids[cand], -sc))[: int(k)]
             out_q.extend([ids[qi]] * len(order))
@@ -1683,7 +1795,6 @@ def _semdedup_frozen_fused(
 
     thr = float(threshold)
     dp = int(round_dp)
-    margin = thr - 10.0 ** (-dp)
     C = np.asarray([[float(x) for x in c] for c in centroids], dtype=np.float64)
     # the exact literal _pick_centroid_cosine bakes in: a Python
     # left-fold sum of squares, then math.sqrt
@@ -1692,22 +1803,6 @@ def _semdedup_frozen_fused(
         dtype=np.float64,
     )
     k, dim = C.shape
-
-    def round_dp_np(vals):
-        if dp == 9:
-            return _round9_half_up_np(vals)
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q = Decimal(1).scaleb(-dp)
-        return np.array(
-            [
-                float(
-                    Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP)
-                )
-                for x in vals
-            ],
-            dtype=np.float64,
-        )
 
     dtypes = dict(df.dtypes)
     idt = dtypes[id_col]
@@ -1725,8 +1820,8 @@ def _semdedup_frozen_fused(
         for d in range(dim):  # sequential over dims == fold order
             t = X[:, d : d + 1] - C[:, d][None, :]
             D += t * t
-        for i in range(k):  # round_dp_np kernels are 1-D
-            D[:, i] = round_dp_np(D[:, i])
+        for i in range(k):  # _round_dp_np is 1-D
+            D[:, i] = _round_dp_np(D[:, i], dp)
         a = np.where(np.isnan(D), np.inf, D).argmin(axis=1)
         CA = C[a]
         nv = np.zeros(n)
@@ -1737,10 +1832,11 @@ def _semdedup_frozen_fused(
         nv = np.sqrt(nv)
         cna = cn[a]
         ok = (nv > 0) & (cna > 0)
-        sims = round_dp_np(
+        sims = _round_dp_np(
             np.where(
                 ok, np.divide(dot_vc, nv * cna, out=np.zeros(n), where=ok), 0.0
-            )
+            ),
+            dp,
         )
         component = np.empty(n, dtype=ids.dtype)
         keep = np.zeros(n, dtype=bool)
@@ -1752,8 +1848,7 @@ def _semdedup_frozen_fused(
                 nv[idx],
                 sims[idx],
                 thr,
-                margin,
-                round_dp_np,
+                dp,
             )
             component[idx] = ids[idx][root]
             keep[idx] = kp
@@ -1776,7 +1871,7 @@ def _semdedup_frozen_fused(
 
 
 def _collapse_cluster_np(
-    ids, X, nrm, sims, thr: float, margin: float, round_dp_np, chunk: int = 512
+    ids, X, nrm, sims, thr: float, dp: int, chunk: int = 512
 ):
     """One cluster's pairing + transitive closure + keep rule — the
     in-task kernel shared by ``_semdedup_collapse`` and
@@ -1786,10 +1881,13 @@ def _collapse_cluster_np(
     ``X`` may be None for singleton clusters. Returns ``(root, keep)``
     — root[i] is the component representative's LOCAL INDEX (min index
     == min id), keep is the first row per component under
-    (cent_sim_r asc, id asc). See ``_semdedup_collapse`` for the full
-    bit-parity argument."""
+    (cent_sim_r asc, id asc). Pairs are kept by the exact filter
+    ``round(cosine, dp) ≥ thr`` behind the sound prefilter at
+    ``thr − 10^−dp``. See ``_semdedup_collapse`` for the full bit-parity
+    argument."""
     import numpy as np
 
+    margin = thr - 10.0 ** (-dp)
     n = len(ids)
     parent = list(range(n))
 
@@ -1825,7 +1923,7 @@ def _collapse_cluster_np(
                 ii, jj = np.nonzero(mask)
                 if not len(ii):
                     continue
-                hit = round_dp_np(sim[ii, jj]) >= thr
+                hit = _round_dp_np(sim[ii, jj], dp) >= thr
                 for a, b in zip(iu[ii[hit]], ju[jj[hit]]):
                     ra, rb = find(int(a)), find(int(b))
                     if ra == rb:
@@ -1902,24 +2000,6 @@ def _semdedup_collapse(
     )
     thr = float(threshold)
     dp = int(round_dp)
-    margin = thr - 10.0 ** (-dp)
-    chunk = 512
-
-    def round_dp_np(vals):
-        if dp == 9:
-            return _round9_half_up_np(vals)
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q = Decimal(1).scaleb(-dp)
-        return np.array(
-            [
-                float(
-                    Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP)
-                )
-                for x in vals
-            ],
-            dtype=np.float64,
-        )
 
     def fn(pdf):
         pdf = pdf.sort_values(id_col)
@@ -1931,9 +2011,7 @@ def _semdedup_collapse(
             else None
         )
         nrm = pdf["__n"].to_numpy(dtype=np.float64)
-        root, keep = _collapse_cluster_np(
-            ids, X, nrm, sims, thr, margin, round_dp_np, chunk
-        )
+        root, keep = _collapse_cluster_np(ids, X, nrm, sims, thr, dp)
         return pd.DataFrame(
             {
                 id_col: ids,
@@ -1959,7 +2037,6 @@ def semdedup_auto(
     vec_col: str = "embedding",
     iters: int = 2,
     round_dp: int = 9,
-    max_expr_k: int = 32,
     max_flat_nlist: int = 64,
     max_branch: int = 64,
     levels: int | None = None,
@@ -1979,14 +2056,10 @@ def semdedup_auto(
     Assignment here is one more Lloyd E-step with the final centroids
     (scaled-integer LONG argmin, ties to the lower cid) — consistent
     with training and, unlike a float-sum argmin, bit-reproducible in
-    ANY summation order, which is what lets the physical form switch
-    freely: expression aggregates while nlist ≤ ``max_expr_k`` (plan
-    size grows with k), blocked-numpy Arrow beyond (``kmeans_lloyd``'s
-    ``assign`` strategies). The default switch point is 32: measured
-    at sf1 (N=20k → nlist=80), the expr plan's k-literal build +
-    Janino compile cost 76.9 s where the Arrow path runs 16.3 s —
-    4.7× — while at coarse-quantizer sizes (nlist ≤ ~16, the oracled
-    contract regime) expr avoids Python entirely and stays faster. The keep-rule score (own-centroid cosine,
+    ANY summation order. Training and assignment both run the Arrow
+    E-step: the r13 warm grid (module note) measured it faster than the
+    expression form at every n×k, including the small oracled sizes.
+    The keep-rule score (own-centroid cosine,
     ``round_dp``-rounded) comes from ONE broadcast join against the
     k-row centroid frame — no k-branch CASE chain. The collapse tail
     (fused per-cluster pairing + closure + keep-the-most-atypical,
@@ -2049,7 +2122,7 @@ def semdedup_auto(
             raise ValueError(f"levels must be >= 2, got {levels}")
         return _semdedup_multilevel(
             df, n, target_cluster_size, nlist, threshold, id_col, vec_col,
-            iters, round_dp, max_expr_k, levels,
+            iters, round_dp, levels,
         )
     if n <= _FUSED_LLOYD_MAX_ROWS and n * nlist <= _FUSED_LLOYD_MAX_CELLS:
         # fused flat path (r13 optimization round, guide §2.4/§1.2):
@@ -2072,28 +2145,21 @@ def semdedup_auto(
         .limit(nlist)
         .collect()
     ]
-    strategy = _estep_strategy(n, nlist, max_expr_k)
     cents, _sizes = kmeans_lloyd(
-        df, init, id_col=id_col, vec_col=vec_col, iters=iters, assign=strategy
+        df, init, id_col=id_col, vec_col=vec_col, iters=iters, assign="arrow"
     )
     v = ensure_min_partitions(df).select(
         F.col(id_col),
         _as_double_array(F.col(vec_col)).alias("__v"),
+    )
+    # carry_vec (r13 optimization round): the Arrow E-step already
+    # holds every vector — carrying it through the batch deletes the
+    # corpus-sized join back to ``v`` on id (a full exchange+sort of
+    # both sides at scale). __n is the deterministic l2_norm expression
+    # on the carried doubles.
+    base = kmeans_assign_arrow(
+        v, cents, id_col, vec_col="__v", carry_vec=True
     ).withColumn("__n", l2_norm(F.col("__v")))
-    if strategy == "expr":
-        dims = v.select(
-            F.col(id_col), F.posexplode("__v").alias("pos", "x")
-        ).select(F.col(id_col), (F.col("pos") + 1).alias("j"), "x")
-        base = v.join(_kmeans_assign_expr(dims, cents, id_col), id_col)
-    else:
-        # carry_vec (r13 optimization round): the Arrow E-step already
-        # holds every vector — carrying it through the batch deletes
-        # the corpus-sized join back to ``v`` on id (a full
-        # exchange+sort of both sides at scale). __n recomputed after:
-        # same deterministic l2_norm expression on the same doubles.
-        base = kmeans_assign_arrow(
-            v, cents, id_col, vec_col="__v", carry_vec=True
-        ).withColumn("__n", l2_norm(F.col("__v")))
     spark = df.sparkSession
     cents_df = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
@@ -2210,23 +2276,6 @@ def _semdedup_tower_fused(
     L = int(levels)
     thr = float(threshold)
     dp = int(round_dp)
-    margin = thr - 10.0 ** (-dp)
-
-    def round_dp_np(vals):
-        if dp == 9:
-            return _round9_half_up_np(vals)
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q = Decimal(1).scaleb(-dp)
-        return np.array(
-            [
-                float(
-                    Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP)
-                )
-                for x in vals
-            ],
-            dtype=np.float64,
-        )
 
     def fn(pdf):
         n = len(pdf)
@@ -2277,12 +2326,13 @@ def _semdedup_tower_fused(
             dot_vc += X[:, d] * CV[:, d]
         nv, ncv = np.sqrt(nv), np.sqrt(ncv)
         ok = (nv > 0) & (ncv > 0)
-        sims = round_dp_np(
+        sims = _round_dp_np(
             np.where(
                 ok,
                 np.divide(dot_vc, nv * ncv, out=np.zeros(n), where=ok),
                 0.0,
-            )
+            ),
+            dp,
         )
         # collapse per leaf cluster — the _semdedup_collapse kernel
         component = np.empty(n, dtype=np.int64)
@@ -2291,7 +2341,7 @@ def _semdedup_tower_fused(
             idx = np.nonzero(leaf == lf)[0]
             root, kp = _collapse_cluster_np(
                 ids[idx], X[idx] if len(idx) >= 2 else None,
-                nv[idx], sims[idx], thr, margin, round_dp_np,
+                nv[idx], sims[idx], thr, dp,
             )
             component[idx] = ids[idx][root]
             keep[idx] = kp
@@ -2327,7 +2377,6 @@ def _semdedup_multilevel(
     vec_col: str,
     iters: int,
     round_dp: int,
-    max_expr_k: int,
     levels: int = 2,
 ) -> DataFrame:
     """Hierarchical SemDeDup body (see ``semdedup_auto``), L levels
@@ -2392,14 +2441,9 @@ def _semdedup_multilevel(
             .limit(b1)
             .collect()
         ]
-        # shared crossover rule (_estep_strategy: plan bound + corpus
-        # bound; constants + box assumption documented at the definition —
-        # the r11 sf1x incident, exactly 20 000 rows on the old `>` bound,
-        # is one of its two measured anchors)
-        strategy = _estep_strategy(n, b1, max_expr_k)
         coarse, _sizes = kmeans_lloyd(
             df, init, id_col=id_col, vec_col=vec_col, iters=iters,
-            assign=strategy,
+            assign="arrow",
         )
         v = ensure_min_partitions(df).select(
             F.col(id_col), _as_double_array(F.col(vec_col)).alias("__v")
@@ -2569,17 +2613,17 @@ def _kmeans_lloyd_fused(
     """Single-task Lloyd trainer — the fused-gate body of
     ``kmeans_lloyd(assign='auto')`` below ``_FUSED_LLOYD_MAX_ROWS`` /
     ``_FUSED_LLOYD_MAX_CELLS`` (constants documented at definition):
-    ONE applyInPandas job runs every iteration in-task with the
-    verbatim ``kmeans_lloyd_grouped`` kernels (scaled-int64 E-step,
-    argmin ties to the lower cid, round(x·10¹²) LONG M-step addends,
-    ``_round9_half_up_np`` means, empty clusters carrying their
-    previous centroid) and emits (cid, cv, n_assigned) — bit-identical
-    centroids AND sizes to the distributed loop (sizes = the LAST
-    iteration's M-step assignment counts, the ``kmeans_lloyd``
-    contract). The 2⁶²-headroom overflow guard runs in-task on the
-    resident matrix (free) and raises the same pre-scaling message —
-    surfaced through the task failure instead of a driver ValueError,
-    the documented fail-fast either way."""
+    ONE applyInPandas job runs every iteration in-task with the shared
+    ``_lloyd_np`` kernel (scaled-int64 E-step, argmin ties to the lower
+    cid, round(x·10¹²) LONG M-step addends, ``_round9_half_up_np``
+    means, empty clusters carrying their previous centroid) and emits
+    (cid, cv, n_assigned) — bit-identical centroids AND sizes to the
+    distributed loop (sizes = the LAST iteration's M-step assignment
+    counts, the ``kmeans_lloyd`` contract). ``_check_scaled_range``
+    runs in-task on the resident matrix (free) — its message surfaces
+    through the task failure instead of a driver ValueError, the
+    documented fail-fast either way. An empty corpus yields no group,
+    hence no rows, and raises the named empty-corpus error."""
     import numpy as np
     import pandas as pd
 
@@ -2588,7 +2632,6 @@ def _kmeans_lloyd_fused(
         [[float(x) for x in c] for c in init_centroids] if explicit else None
     )
     k = len(init) if explicit else int(first_k_k)
-    row_chunk = 1024
     out_schema = "cid int, cv array<double>, n_assigned long"
 
     def fn(pdf):
@@ -2601,49 +2644,25 @@ def _kmeans_lloyd_fused(
             )
         if explicit:
             X = np.asarray(list(pdf["__fv"]), dtype=np.float64)
-            C = np.asarray(init, dtype=np.float64)
+            C0 = np.asarray(init, dtype=np.float64)
         else:
             # init="first_k": first min(k, n) vectors by id, selected
             # in-task (== the TakeOrdered collect the above-gate path
             # runs — same rows, same order)
             pdf = pdf.sort_values("__fid")
             X = np.asarray(list(pdf["__fv"]), dtype=np.float64)
-            C = X[: min(k, n)].copy()
-        dim = C.shape[1]
-        max_x = float(np.max(np.abs(X))) if X.size else 0.0
-        max_c0 = float(np.max(np.abs(C))) if C.size else 0.0
-        max_t = max_x + max(max_x, max_c0)
-        if dim * (max_t * max_t) * 1e12 >= float(2**62):
-            raise ValueError(
-                f"kmeans_lloyd: coordinate range too large for the exact "
-                f"scaled-integer distance (max |coord| {max(max_x, max_c0):g} "
-                f"at dim {dim}: dim·(max|t|)²·1e12 ≥ 2⁶², the int64 sum "
-                f"would wrap silently) — pre-scale the vectors (e.g. divide "
-                f"by their max norm) before training"
-            )
+            C0 = X[: min(k, n)]
+        _check_scaled_range(
+            C0.shape[1],
+            float(np.max(np.abs(X))) if X.size else 0.0,
+            float(np.max(np.abs(C0))) if C0.size else 0.0,
+        )
         Xi = _round_half_away_signed_np(X * 1e12).astype(np.int64)
-        best = np.empty(n, dtype=np.int32)
-        counts_last: dict[int, int] = {}
-        for _ in range(iters):
-            for r0 in range(0, n, row_chunk):
-                xb = X[r0 : r0 + row_chunk]
-                t = xb[:, None, :] - C[None, :, :]
-                d = _round_half_away_nonneg_i64(t * t * 1e12).sum(axis=2)
-                best[r0 : r0 + len(xb)] = d.argmin(axis=1)
-            uc, inv = np.unique(best, return_inverse=True)
-            npart = np.bincount(inv)
-            counts_last = {int(c): int(m) for c, m in zip(uc, npart)}
-            S = np.zeros((len(uc), dim), dtype=np.int64)
-            np.add.at(S, inv, Xi)
-            for row, (cid, cnt) in enumerate(zip(uc, npart)):
-                C[int(cid)] = _round9_half_up_np(
-                    S[row].astype(np.float64) / 1e12 / float(cnt)
-                )
-        k_eff = len(C)
+        C, _best, counts = _lloyd_np(X, Xi, C0, iters)
         return pd.DataFrame(
-            {"cid": np.arange(k_eff, dtype=np.int32),
+            {"cid": np.arange(len(C), dtype=np.int32),
              "cv": list(C),
-             "n_assigned": [counts_last.get(i, 0) for i in range(k_eff)]}
+             "n_assigned": counts}
         )
 
     cols = [
@@ -2659,7 +2678,7 @@ def _kmeans_lloyd_fused(
         .collect()
     )
     if not rows:
-        raise ValueError("init_centroids must be non-empty")
+        raise ValueError("kmeans_lloyd: empty corpus (no vectors to train on)")
     by_cid = {r["cid"]: r for r in rows}
     k_out = len(rows)
     cents = [[float(x) for x in by_cid[i]["cv"]] for i in range(k_out)]
@@ -2749,8 +2768,6 @@ def kmeans_lloyd(
       large k, where the trainer is O(N·k·dim) per iteration no
       matter what and vectorized C is the only sane executor.
     """
-    from ..operators.classify import _round9_half_up
-
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     first_k = isinstance(init_centroids, str)
@@ -2778,11 +2795,10 @@ def kmeans_lloyd(
             f"assign must be 'expr', 'arrow' or 'auto', got {assign!r}"
         )
     if assign == "auto":
-        # shared crossover rule (_estep_strategy: plan bound + corpus
-        # bound, constants + box assumption documented at the
-        # definition; one count to decide — at sf10x the expr path's
-        # 12.8M-row exploded cache made ext_kmeans_train 7.9 s where
-        # arrow's fused-M-step passes run the same training in ~3 s).
+        # one count decides the fused gate; above it "auto" means
+        # arrow (module note — and at sf10x the expr path's 12.8M-row
+        # exploded cache made ext_kmeans_train 7.9 s where arrow's
+        # fused-M-step passes run the same training in ~3 s).
         n = df.count()
         k0 = k if first_k else len(init_centroids)
         if (
@@ -2809,7 +2825,7 @@ def kmeans_lloyd(
                 iters,
                 first_k_k=k if first_k else None,
             )
-        assign = _estep_strategy(n, k0)
+        assign = "arrow"  # module note: the r13 warm grid
     if first_k:
         init_centroids = [
             [float(x) for x in r["__v"]]
@@ -2821,7 +2837,9 @@ def kmeans_lloyd(
             .collect()
         ]
         if not init_centroids:
-            raise ValueError("init_centroids must be non-empty")
+            raise ValueError(
+                "kmeans_lloyd: empty corpus (no vectors to train on)"
+            )
     dim = len(init_centroids[0])
     if any(len(c) != dim for c in init_centroids):
         raise ValueError("init centroids must share one dimensionality")
@@ -2851,19 +2869,9 @@ def kmeans_lloyd(
             .persist()
         )
     cents = [list(map(float, c)) for c in init_centroids]
-    k = len(cents)
-    # Overflow guard (r9 advice → r10): the scaled-integer distance sums
-    # per-term round(t²·10¹²) into a LONG, and Spark's non-ANSI LONG sum
-    # WRAPS silently where DuckDB raises — so enforce the documented
-    # precondition instead of documenting it. One extra bounded agg on
-    # the already-persisted exploded cache (it warms the persist the
-    # first iteration would populate anyway): every centroid any
-    # iteration can produce is a mean of data coordinates, so
-    # |t| ≤ max|x| + max(max|x|, max|c0|) bounds EVERY iteration's
-    # terms, and dim · (max|t|)² · 10¹² < 2⁶² (one bit of headroom
-    # under the int64 line) guarantees no per-vector distance sum can
-    # wrap. Unit-scale embeddings pass with ~10⁴× margin; unnormalized
-    # feature vectors with |coord| ≳ 10³ at dim 64 raise with guidance.
+    # Overflow guard (r9 advice → r10, ``_check_scaled_range``): one
+    # extra bounded agg on the already-persisted cache (it warms the
+    # persist the first iteration would populate anyway).
     if dims is not None:
         max_x = dims.agg(F.max(F.abs(F.col("x")))).collect()[0][0] or 0.0
     else:
@@ -2874,19 +2882,13 @@ def kmeans_lloyd(
             or 0.0
         )
     max_c0 = max((abs(float(x)) for c in cents for x in c), default=0.0)
-    max_t = max_x + max(max_x, max_c0)
-    if dim * (max_t * max_t) * 1e12 >= float(2**62):
-        if dims is not None:
-            dims.unpersist()
-        if vecs is not None:
-            vecs.unpersist()
-        raise ValueError(
-            f"kmeans_lloyd: coordinate range too large for the exact "
-            f"scaled-integer distance (max |coord| {max(max_x, max_c0):g} "
-            f"at dim {dim}: dim·(max|t|)²·1e12 ≥ 2⁶², the int64 sum "
-            f"would wrap silently) — pre-scale the vectors (e.g. divide "
-            f"by their max norm) before training"
-        )
+    try:
+        _check_scaled_range(dim, max_x, max_c0)
+    except ValueError:
+        for cache in (dims, vecs):
+            if cache is not None:
+                cache.unpersist()
+        raise
     sizes: dict[int, int] = {}
     for _ in range(iters):
         # M-step addends quantize through the E-step's OWN convention
@@ -2907,53 +2909,33 @@ def kmeans_lloyd(
                 vecs, cents, id_col, vec_col="__v", emit="mstep"
             ).collect()
             sums: dict[int, list[int]] = {}
-            counts: dict[int, int] = {}
+            sizes = {}
             for r in parts:
                 cid = r["cid"]
-                counts[cid] = counts.get(cid, 0) + r["n_part"]
-                if cid in sums:
-                    acc = sums[cid]
-                    for j, v in enumerate(r["s_part"]):
-                        acc[j] += v
-                else:
-                    sums[cid] = list(r["s_part"])
-            sizes = dict(counts)
-            cents = [
-                [
-                    _round9_half_up(float(sums[ci][j]) / 1e12 / counts[ci])
-                    if ci in counts
-                    else cents[ci][j]
-                    for j in range(dim)
-                ]
-                for ci in range(k)
-            ]
-            continue
-        upd = dims.join(_kmeans_assign_expr(dims, cents, id_col), id_col)
-        rows = (
-            upd.groupBy("cid", "j")
-            .agg(
-                F.sum(F.round(F.col("x") * F.lit(1e12)).cast("long")).alias(
-                    "s"
-                ),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()
-        )
-        means = {(r["cid"], r["j"]): (r["s"], r["n"]) for r in rows}
-        sizes = {}
-        for (cid, _), (_, n) in means.items():
-            sizes[cid] = n
-        cents = [
-            [
-                _round9_half_up(
-                    float(means[(ci, j)][0]) / 1e12 / means[(ci, j)][1]
+                sizes[cid] = sizes.get(cid, 0) + r["n_part"]
+                acc = sums.setdefault(cid, [0] * dim)
+                for j, v in enumerate(r["s_part"]):
+                    acc[j] += v
+            stats = {
+                (ci, j): (s, sizes[ci])
+                for ci, acc in sums.items()
+                for j, s in enumerate(acc)
+            }
+        else:
+            upd = dims.join(_kmeans_assign_expr(dims, cents, id_col), id_col)
+            rows = (
+                upd.groupBy("cid", "j")
+                .agg(
+                    F.sum(F.round(F.col("x") * F.lit(1e12)).cast("long")).alias(
+                        "s"
+                    ),
+                    F.count(F.lit(1)).alias("n"),
                 )
-                if (ci, j) in means
-                else cents[ci][j - 1]
-                for j in range(1, dim + 1)
-            ]
-            for ci in range(k)
-        ]
+                .collect()
+            )
+            stats = {(r["cid"], r["j"] - 1): (r["s"], r["n"]) for r in rows}
+            sizes = {ci: n for (ci, _), (_, n) in stats.items()}
+        cents = _next_centroids(cents, stats)
     if dims is not None:
         dims.unpersist()
     if vecs is not None:
@@ -3011,11 +2993,11 @@ def kmeans_assign_arrow(
     ``_round_half_away_nonneg_np``, == Spark F.round == DuckDB round
     on EVERY double incl. the 0.5−2⁻⁵⁴ boundary class the old
     floor(+0.5) form double-rounded — ADVICE r12 fix) summed as
-    int64, argmin ties to the lower centroid id — computed in
-    blocked numpy inside one ``mapInPandas``. Integer sums are
-    associative, so numpy's pairwise order equals the expression
-    fold EXACTLY (the reason the Arrow path quantizes before summing
-    rather than summing doubles). Returns (id_col, cid int).
+    int64, argmin ties to the lower centroid id — computed by the
+    shared blocked kernel ``_nearest_np`` inside one ``mapInPandas``.
+    Integer sums are associative, so numpy's pairwise order equals the
+    expression fold EXACTLY (the reason the Arrow path quantizes before
+    summing rather than summing doubles). Returns (id_col, cid int).
 
     100 TB shape: centroids ship once per task in the closure as a
     k×dim float64 ndarray (8·k·dim bytes — 800×64 is 400 KB); the
@@ -3054,48 +3036,22 @@ def kmeans_assign_arrow(
         out_schema = f"{id_col} long, cid int"
         if carry_vec:
             out_schema += f", {vec_col} array<double>"
-    row_chunk, cent_chunk = 1024, 64
 
     def fn(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy()
             X = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            best_d = np.empty(n, dtype=np.int64)
-            best_i = np.empty(n, dtype=np.int32)
-            for r0 in range(0, n, row_chunk):
-                xb = X[r0 : r0 + row_chunk]
-                bd = None
-                bi = None
-                for c0 in range(0, len(C), cent_chunk):
-                    cb = C[c0 : c0 + cent_chunk]
-                    t = xb[:, None, :] - cb[None, :, :]
-                    d = _round_half_away_nonneg_i64(t * t * 1e12).sum(
-                        axis=2
-                    )
-                    ci = d.argmin(axis=1)  # first occurrence = lower cid
-                    cd = d[np.arange(len(xb)), ci]
-                    if bd is None:
-                        bd, bi = cd, (ci + c0).astype(np.int32)
-                    else:
-                        upd = cd < bd  # strict: earlier chunk keeps ties
-                        bd = np.where(upd, cd, bd)
-                        bi = np.where(upd, (ci + c0).astype(np.int32), bi)
-                best_d[r0 : r0 + len(xb)] = bd
-                best_i[r0 : r0 + len(xb)] = bi
+            best = _nearest_np(X, C)
             if emit == "mstep":
-                Xi = _round_half_away_signed_np(X * 1e12).astype(np.int64)
-                uc, inv = np.unique(best_i, return_inverse=True)
-                npart = np.bincount(inv)
-                S = np.zeros((len(uc), X.shape[1]), dtype=np.int64)
-                np.add.at(S, inv, Xi)
+                uc, npart, S = _mstep_sums_np(
+                    best, _round_half_away_signed_np(X * 1e12).astype(np.int64)
+                )
                 yield pd.DataFrame(
                     {"cid": uc, "n_part": npart, "s_part": list(S)}
                 )
                 continue
-            out = {id_col: ids, "cid": best_i}
+            out = {id_col: pdf[id_col].to_numpy(), "cid": best}
             if carry_vec:
                 out[vec_col] = pdf[vec_col].to_numpy()
             yield pd.DataFrame(out)
@@ -3133,9 +3089,9 @@ def kmeans_assign_grouped(
     once on ``group_col`` (exchange-free when the caller pre-
     partitioned them on it), centroids (|leaf| rows total) exchange
     beside them, and each group's assignment is blocked numpy over a
-    branch-sized sub-problem. Per-group memory is O(|branch|·dim +
-    chunk·|branch cents|·dim); the row-chunk bound keeps the distance
-    temporary ~tens of MB however large the branch. Returns
+    branch-sized sub-problem (``_nearest_np``). Per-group memory is
+    O(|branch|·dim) plus a row × centroid block temporary of ~tens of
+    MB however large the branch or its centroid count. Returns
     (id, group, scid int), plus the bit-preserved vector when
     ``carry_vec`` (the grouped M-step consumes it directly — same
     no-exploded-cache rationale as ``kmeans_assign_arrow``).
@@ -3160,7 +3116,6 @@ def kmeans_assign_grouped(
         out_schema = f"{id_col} long, {group_col} int, scid int"
         if carry_vec:
             out_schema += f", {vec_col} array<double>"
-    row_chunk = 1024
 
     def fn(key, left, right):
         if len(left) == 0 or len(right) == 0:
@@ -3183,19 +3138,12 @@ def kmeans_assign_grouped(
         ids = left[id_col].to_numpy()
         X = np.asarray(list(left[vec_col]), dtype=np.float64)
         n = len(X)
-        best = np.empty(n, dtype=np.int32)
-        for r0 in range(0, n, row_chunk):
-            xb = X[r0 : r0 + row_chunk]
-            t = xb[:, None, :] - C[None, :, :]
-            d = _round_half_away_nonneg_i64(t * t * 1e12).sum(axis=2)
-            # first occurrence over the scid-sorted axis = lowest scid
-            best[r0 : r0 + len(xb)] = scids[d.argmin(axis=1)]
+        # lowest position over the scid-sorted axis = lowest scid
+        best = scids[_nearest_np(X, C)]
         if emit == "mstep":
-            Xi = _round_half_away_signed_np(X * 1e12).astype(np.int64)
-            uc, inv = np.unique(best, return_inverse=True)
-            npart = np.bincount(inv)
-            S = np.zeros((len(uc), X.shape[1]), dtype=np.int64)
-            np.add.at(S, inv, Xi)
+            uc, npart, S = _mstep_sums_np(
+                best, _round_half_away_signed_np(X * 1e12).astype(np.int64)
+            )
             return pd.DataFrame(
                 {group_col: np.full(len(uc), key[0], dtype=np.int32),
                  "scid": uc,
@@ -3266,7 +3214,6 @@ def kmeans_lloyd_grouped(
 
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    row_chunk = 1024
     out_schema = f"{group_col} int, scid int, cv array<double>"
 
     def fn(key, left, right):
@@ -3288,31 +3235,12 @@ def kmeans_lloyd_grouped(
                  "cv": list(C)}
             )
         X = np.asarray(list(left[vec_col]), dtype=np.float64)
-        n = len(X)
         # addends quantized ONCE (iteration-invariant): round(x·10¹²)
-        # signed exact half-away int64 — the r11 M-step convention
+        # signed exact half-away int64 — the r11 M-step convention.
+        # Positions over the scid-sorted axis order like the scids, so
+        # ties still go to the lowest scid.
         Xi = _round_half_away_signed_np(X * 1e12).astype(np.int64)
-        scid_pos = {int(s): i for i, s in enumerate(scids)}
-        best = np.empty(n, dtype=np.int32)
-        for _ in range(iters):
-            for r0 in range(0, n, row_chunk):
-                xb = X[r0 : r0 + row_chunk]
-                t = xb[:, None, :] - C[None, :, :]
-                d = _round_half_away_nonneg_i64(t * t * 1e12).sum(axis=2)
-                # first occurrence over the scid-sorted axis = lowest scid
-                best[r0 : r0 + len(xb)] = scids[d.argmin(axis=1)]
-            uc, inv = np.unique(best, return_inverse=True)
-            npart = np.bincount(inv)
-            S = np.zeros((len(uc), X.shape[1]), dtype=np.int64)
-            np.add.at(S, inv, Xi)
-            for row, (sc, cnt) in enumerate(zip(uc, npart)):
-                ci = scid_pos[int(sc)]
-                # int64→double exact under the 2⁵³ envelope; /1e12
-                # then /n are the engine's own double divisions; the
-                # vectorized repr-based round9 twin finishes the mean
-                C[ci] = _round9_half_up_np(
-                    S[row].astype(np.float64) / 1e12 / float(cnt)
-                )
+        C, _best, _counts = _lloyd_np(X, Xi, C, iters)
         return pd.DataFrame(
             {group_col: np.full(len(scids), key[0], dtype=np.int32),
              "scid": scids,
@@ -3337,42 +3265,14 @@ def kmeans_lloyd_grouped(
     )
 
 
-def _lloyd_rounds_np(X, Xi, k: int, iters: int, row_chunk: int = 1024):
-    """The in-task Lloyd kernel shared by ``kmeans_train_assign_grouped``
-    and ``_semdedup_tower_fused`` (r13 — extracted verbatim so the two
-    fused paths cannot drift): init = the first ``k`` rows (callers
-    pass id-sorted arrays, so this is first-k-by-id), ``iters`` rounds
-    of scaled-int64 E-step (per-term round(t²·10¹²) exact half-away,
-    argmin first-occurrence = lowest scid) + M-step (pre-quantized
-    round(x·10¹²) LONG addends ``Xi``, means through the vectorized
-    repr-based 9dp HALF_UP twin, empty sub-clusters carrying their
-    previous centroid), then ONE final E-step with the trained
-    centroids. Returns ``(best int32[n], C float64[k, dim])``."""
-    import numpy as np
-
-    n = len(X)
-    C = X[:k].copy()
-    best = np.empty(n, dtype=np.int32)
-
-    def estep():
-        for r0 in range(0, n, row_chunk):
-            xb = X[r0 : r0 + row_chunk]
-            t = xb[:, None, :] - C[None, :, :]
-            d = _round_half_away_nonneg_i64(t * t * 1e12).sum(axis=2)
-            best[r0 : r0 + len(xb)] = d.argmin(axis=1)
-
-    for _ in range(iters):
-        estep()
-        uc, inv = np.unique(best, return_inverse=True)
-        npart = np.bincount(inv)
-        S = np.zeros((len(uc), X.shape[1]), dtype=np.int64)
-        np.add.at(S, inv, Xi)
-        for row, (sc, cnt) in enumerate(zip(uc, npart)):
-            C[int(sc)] = _round9_half_up_np(
-                S[row].astype(np.float64) / 1e12 / float(cnt)
-            )
-    estep()  # final assignment with the trained centroids
-    return best, C
+def _lloyd_rounds_np(X, Xi, k: int, iters: int):
+    """The in-task train+assign shared by ``kmeans_train_assign_grouped``
+    and ``_semdedup_tower_fused``: ``_lloyd_np`` from the first ``k``
+    rows (callers pass id-sorted arrays, so this is first-k-by-id),
+    then ONE final ``_nearest_np`` with the trained centroids. Returns
+    ``(best int32[n], C float64[k, dim])``."""
+    C, _best, _counts = _lloyd_np(X, Xi, X[:k], iters)
+    return _nearest_np(X, C), C
 
 
 def kmeans_train_assign_grouped(
@@ -3422,7 +3322,6 @@ def kmeans_train_assign_grouped(
         raise ValueError(f"iters must be >= 1, got {iters}")
     T = int(t_target)
     s = int(splits_remaining)
-    row_chunk = 1024
     out_schema = (
         f"{group_col} int, scid int, {id_col} long, "
         f"{vec_col} array<double>, cv array<double>"
@@ -3447,7 +3346,7 @@ def kmeans_train_assign_grouped(
         # addends quantized ONCE (iteration-invariant) — the r11
         # M-step convention, verbatim kmeans_lloyd_grouped
         Xi = _round_half_away_signed_np(X * 1e12).astype(np.int64)
-        best, C = _lloyd_rounds_np(X, Xi, k, iters, row_chunk)
+        best, C = _lloyd_rounds_np(X, Xi, k, iters)
         mrows = pd.DataFrame(
             {group_col: np.full(n, g, dtype=np.int32),
              "scid": best.astype(np.int32),
@@ -3631,7 +3530,6 @@ def pq_assign(
         raise ValueError(
             f"codebooks cover subspaces {sub_ids}, expected 0..{m_sub - 1}"
         )
-    row_chunk = 1024
 
     src = ensure_min_partitions(vecs).select(
         F.col(id_col).cast("long").alias(id_col),
@@ -3650,18 +3548,11 @@ def pq_assign(
         for pdf in batches:
             ids = pdf[id_col].to_numpy()
             X = np.asarray(list(pdf["__e"]), dtype=np.float64)
-            n = len(X)
-            codes = np.empty((n, m_sub), dtype=np.int32)
+            codes = np.empty((len(X), m_sub), dtype=np.int32)
             for s in range(m_sub):
                 scids, C = cb[s]
                 xs = X[:, s * dsub : (s + 1) * dsub]
-                for r0 in range(0, n, row_chunk):
-                    xb = xs[r0 : r0 + row_chunk]
-                    t = xb[:, None, :] - C[None, :, :]
-                    d = _round_half_away_nonneg_i64(t * t * 1e12).sum(
-                        axis=2
-                    )
-                    codes[r0 : r0 + len(xb), s] = scids[d.argmin(axis=1)]
+                codes[:, s] = scids[_nearest_np(xs, C)]
             out = {id_col: ids, "codes": list(codes)}
             for c in carry_cols:
                 out[c] = pdf[c]
@@ -3704,14 +3595,7 @@ def pq_adc_topk(
         if list(scids) != list(range(len(scids))):
             raise ValueError(f"subspace {s} scids not dense: {list(scids)}")
         qs = q[s * dsub : (s + 1) * dsub]
-        row = []
-        for c in C:
-            d2 = 0
-            for j in range(dsub):
-                t = qs[j] - c[j]
-                d2 += _round_half_away_int(t * t * 1e12)
-            row.append(d2)
-        lut_rows.append(row)
+        lut_rows.append([_d2_scaled_int(qs, list(c)) for c in C])
     # ADC scoring as ONE Arrow gather (r13 optimization round,
     # continuation session; guide §4.2): the LUT rides in the task
     # closure as a (m_sub, ksub) int64 ndarray instead of an
@@ -3720,9 +3604,8 @@ def pq_adc_topk(
     # driver gap in ext_pq_topk's job timeline) and the per-row
     # zip_with/aggregate fold ran interpreted. int64 gather + sum is
     # bit-equal to the integer fold (integer addition is associative);
-    # malformed codes (wrong arity, out of [0, ksub)) fail FAST where
-    # F.get silently degraded them to NULL scores — the _vec_matrix
-    # fail-fast convention.
+    # malformed codes fail FAST (``_codes_matrix``) where F.get silently
+    # degraded them to NULL scores.
     import numpy as np
     import pandas as pd
 
@@ -3733,19 +3616,7 @@ def pq_adc_topk(
     def fn(it):
         cols = np.arange(m_sub)
         for pdf in it:
-            n = len(pdf)
-            cm = (
-                np.asarray(list(pdf["codes"]), dtype=np.int64)
-                if n
-                else np.zeros((0, m_sub), dtype=np.int64)
-            )
-            if cm.ndim != 2 or cm.shape[1] != m_sub or (
-                n and (cm.min() < 0 or cm.max() >= ksub)
-            ):
-                raise ValueError(
-                    f"pq_adc_topk: malformed codes batch (expected "
-                    f"{m_sub} codes per row in [0, {ksub}))"
-                )
+            cm = _codes_matrix(pdf, m_sub, ksub, "pq_adc_topk")
             d2 = lut_np[cols[None, :], cm].sum(axis=1)
             yield pd.DataFrame({id_col: pdf[id_col], "adc_d2": d2})
 
@@ -3894,12 +3765,14 @@ def ivfpq_adc_topk(
     ONE per-probed-list ADC lookup table from the query's RESIDUAL
     against that list's centroid (nprobe·m_sub·ksub exact ints — the
     asymmetric-distance trick at the residual level), then a single
-    pure-expression pass over the probed slice of the codes column:
-    ``list_id`` filter (partition-prunable when the codes table is
-    laid out by list), a CASE chain picking the probe's LUT, and the
-    zip_with/integer-fold ADC feeding orderBy().limit(k) —
-    TakeOrderedAndProject, per-partition heaps, nothing shuffled but
-    k rows.
+    pass over the probed slice of the codes column: a ``list_id``
+    filter in the plan (partition-prunable when the codes table is
+    laid out by list), then one Arrow gather per batch that picks each
+    row's probe LUT by ``list_id`` and sums its m_sub int64 entries,
+    feeding orderBy().limit(k) — TakeOrderedAndProject, per-partition
+    heaps, nothing shuffled but k rows. Malformed codes (NULL rows or
+    codes, wrong arity, out of range) raise ``_codes_matrix``'s named
+    error.
 
     Probed-ADC semantics exactly as FAISS: d²(q, v) ≈ Σ_sub
     lut[list(v)][sub][code_sub(v)] where lut is built from
@@ -3940,8 +3813,8 @@ def ivfpq_adc_topk(
     # whose per-row fold ran interpreted. int64 gather + sum is
     # bit-equal to the integer fold; the probed-list filter stays in
     # the PLAN (partition-prunable on a list-laid-out codes table);
-    # malformed codes fail fast (the _vec_matrix convention) where
-    # F.get degraded them to NULL scores.
+    # malformed codes fail fast (``_codes_matrix``) where F.get
+    # degraded them to NULL scores.
     import numpy as np
     import pandas as pd
 
@@ -3954,21 +3827,9 @@ def ivfpq_adc_topk(
     def fn(it):
         cols = np.arange(m_sub)
         for pdf in it:
-            n = len(pdf)
-            cm = (
-                np.asarray(list(pdf["codes"]), dtype=np.int64)
-                if n
-                else np.zeros((0, m_sub), dtype=np.int64)
-            )
-            if cm.ndim != 2 or cm.shape[1] != m_sub or (
-                n and (cm.min() < 0 or cm.max() >= ksub)
-            ):
-                raise ValueError(
-                    f"ivfpq_adc_topk: malformed codes batch (expected "
-                    f"{m_sub} codes per row in [0, {ksub}))"
-                )
+            cm = _codes_matrix(pdf, m_sub, ksub, "ivfpq_adc_topk")
             lids = pdf["list_id"].to_numpy()
-            d2 = np.zeros(n, dtype=np.int64)
+            d2 = np.zeros(len(pdf), dtype=np.int64)
             for lid in np.unique(lids):
                 m = lids == lid
                 d2[m] = luts_np[int(lid)][cols[None, :], cm[m]].sum(axis=1)

@@ -4461,7 +4461,7 @@ def test_ivfpq_separable_masses_probe_and_recall(spark):
     list, adc_d2 = 0, ranks by id. The end-to-end invariant tying
     ivfpq_encode (assignment → residual → grouped-Lloyd codebooks →
     carry-col codes) to ivfpq_adc_topk (probe ranking → residual LUT
-    → CASE-chain ADC)."""
+    → Arrow-gather ADC)."""
     from taxi_rides_ny_duckdb_spark.operators.similarity import (
         ivfpq_adc_topk,
         ivfpq_encode,
@@ -4655,23 +4655,99 @@ def test_binary_sign_words_packs_expected(spark):
     assert rows[2] == [2**31, 2**31]
 
 
-def test_estep_strategy_always_arrow():
-    """r13 warm-regime re-measurement: arrow won every cell of the
-    n×k grid (incl. the tiny contract sizes the old expr bound existed
-    for — the worker spin-up the bound guarded against is paid by the
-    collapse's applyInPandas regardless), so 'auto' always resolves to
-    arrow. The expr form stays explicitly selectable (assign='expr');
-    the bit-equality pins elsewhere in this file keep both forms
-    value-identical."""
+def test_kmeans_assign_ties_across_centroid_blocks(spark):
+    """k = 70 splits the E-step's centroid axis into blocks of 64;
+    identical centroids at indices 63 and 64 sit either side of the
+    block edge, and both kmeans_assign_arrow and kmeans_assign_grouped
+    must break the tie to the LOWER index, 63 — and equal an unblocked
+    argmin over the scaled-int distances on every row."""
+    import numpy as np
+
     from taxi_rides_ny_duckdb_spark.operators.similarity import (
-        _EXPR_ESTEP_MAX_K,
-        _estep_strategy,
+        _round_half_away_nonneg_np,
+        kmeans_assign_arrow,
+        kmeans_assign_grouped,
     )
 
-    for n, k in [(500, 2), (500, 8), (2_000, _EXPR_ESTEP_MAX_K),
-                 (2_001, 2), (20_000, 28), (500, 64)]:
-        assert _estep_strategy(n, k) == "arrow"
-    assert _estep_strategy(500, 64, max_expr_k=64) == "arrow"
+    rng = random.Random(70)
+    dim, k = 4, 70
+    cents = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(k)]
+    cents[64] = list(cents[63])
+    vecs = (
+        [list(cents[63]) for _ in range(5)]
+        + [[x + rng.uniform(-1e-3, 1e-3) for x in cents[63]] for _ in range(15)]
+        + [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(40)]
+    )
+    X, C = np.asarray(vecs), np.asarray(cents)
+    t = X[:, None, :] - C[None, :, :]
+    d = _round_half_away_nonneg_np(t * t * 1e12).astype(np.int64).sum(axis=2)
+    want = {i: int(c) for i, c in enumerate(d.argmin(axis=1))}
+    assert all(want[i] == 63 for i in range(20))
+
+    df = spark.createDataFrame(
+        [(i, 0, v) for i, v in enumerate(vecs)],
+        "vec_id long, bid int, __v array<double>",
+    )
+    arrow = {
+        r["vec_id"]: r["cid"]
+        for r in kmeans_assign_arrow(df, cents, vec_col="__v").collect()
+    }
+    assert arrow == want
+    cents_df = spark.createDataFrame(
+        [(0, s, cv) for s, cv in enumerate(cents)],
+        "bid int, scid int, cv array<double>",
+    )
+    grouped = {
+        r["vec_id"]: r["scid"]
+        for r in kmeans_assign_grouped(df, cents_df).collect()
+    }
+    assert grouped == want
+
+
+def test_kmeans_lloyd_empty_corpus_named_error(spark, monkeypatch):
+    """An empty corpus with init='first_k' raises the named 'empty
+    corpus' ValueError on both sides of the fused gate, instead of
+    'init_centroids must be non-empty', which blames an argument the
+    caller never passed."""
+    from taxi_rides_ny_duckdb_spark.operators import similarity as S
+
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="empty corpus"):
+        S.kmeans_lloyd(empty, "first_k", k=3)  # default expr: collect path
+    with pytest.raises(ValueError, match="empty corpus"):
+        S.kmeans_lloyd(empty, "first_k", k=3, assign="auto")  # fused
+    # n = 0 still passes a 0-row gate, so -1 forces the distributed side
+    monkeypatch.setattr(S, "_FUSED_LLOYD_MAX_ROWS", -1)
+    with pytest.raises(ValueError, match="empty corpus"):
+        S.kmeans_lloyd(empty, "first_k", k=3, assign="auto")
+
+
+@pytest.mark.parametrize("op", ["pq_adc_topk", "ivfpq_adc_topk"])
+@pytest.mark.parametrize("bad", [None, [1, None]], ids=["null_row", "null_code"])
+def test_adc_topk_names_null_codes(spark, op, bad):
+    """A NULL codes row and a NULL code inside a row fail with the
+    operator's named 'malformed codes batch' error — not numpy's
+    inhomogeneous-shape ValueError or a bare TypeError."""
+    from pyspark.errors import PythonException
+
+    from taxi_rides_ny_duckdb_spark.operators import similarity as S
+
+    m = 2
+    cb = spark.createDataFrame(
+        [(s, c, [float(c), float(s)]) for s in range(m) for c in range(2)],
+        "sub_id int, scid int, cv array<double>",
+    )
+    codes = spark.createDataFrame(
+        [(0, [0, 1], 0), (1, bad, 0)],
+        "vec_id long, codes array<int>, list_id int",
+    )
+    q = [0.0, 1.0, 0.0, 1.0]
+    if op == "pq_adc_topk":
+        out = S.pq_adc_topk(codes.drop("list_id"), cb, q, k=2, m_sub=m)
+    else:
+        out = S.ivfpq_adc_topk(codes, cb, [[0.0] * 4], q, k=2, m_sub=m)
+    with pytest.raises(PythonException, match=f"{op}: malformed codes batch"):
+        out.collect()
 
 
 def test_round9_vectorized_matches_scalar(spark):
