@@ -99,18 +99,18 @@ def query(
 #    rows stale; set computed by tools/changed_queries.py — the r12
 #    ad-hoc AST call-closure, promoted to a tracked tool — seeded
 #    with the edited functions kmeans_lloyd, kmeans_lloyd_grouped,
-#    the E-step strategy selector (since deleted), _round9_half_up,
+#    the E-step strategy selector (since deleted), the 9dp round twin,
 #    connected_components, _semdedup_collapse, _semdedup_multilevel,
 #    semdedup_auto, temperature_mixture, lr_train_surrogate):
 #    - the ONE-PASS grouped Lloyd trainer (all iterations inside one
 #      cogroup; means by the Python repr-based round9 twin) + the
-#      arrow-always E-step strategy + the repr-based _round9_half_up
+#      arrow-always E-step strategy + the repr-based 9dp round twin
 #      fix (both engines round the SHORTEST repr, not the exact
 #      binary value): every trained-quantizer query — ext_kmeans_train,
 #      ext_semdedup{,_auto,_hier,_hier3}, ext_pq_topk, ext_pq_recall,
 #      ext_ivfpq_topk, ext_ivfpq_recall — plus the lr surrogate pair
 #      (ext_lr_train, ext_lr_score) whose weights round through the
-#      same twin, and ext_temperature_mixture (its _round9 twin);
+#      same twin, and ext_temperature_mixture (its 9dp round twin);
 #    - connected_components (limit-probe gate, edge-touched-only
 #      union-find, emit="mapping"): every CC consumer —
 #      ext_contrastive_pairs, ext_dedup_cluster_components,

@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 
 from .cache import scoped_persist
 from .contract import query
-from .functions.parity import dsum
+from .functions.parity import dsum, round_half_up
 from .functions.text import (
     bpe_ish_token_count,
     fingerprint,
@@ -6917,15 +6917,15 @@ def ext_lr_train(spark, sf_dir):
     ONE action; the oracle replays the whole descent as unrolled
     CTEs. memoize=False: the trainer collects gradients eagerly per
     iteration. Output: 32 weights + bias (idx −1), 9dp."""
-    from .operators.classify import _round9_half_up, lr_train_surrogate
+    from .operators.classify import lr_train_surrogate
 
     d = load(spark, sf_dir, "documents")
     train = d.filter(F.col("doc_id") % 5 != 0).withColumn(
         "y", (F.col("lang") == "en").cast("int")
     )
     w, b = lr_train_surrogate(train, "text", "doc_id", "y", dim=32, iters=3, lr=0.5)
-    rows = [(i, _round9_half_up(v)) for i, v in enumerate(w)]
-    rows.append((-1, _round9_half_up(b)))
+    rows = [(i, round_half_up(v, 9)) for i, v in enumerate(w)]
+    rows.append((-1, round_half_up(b, 9)))
     return spark.createDataFrame(rows, "idx bigint, weight_r double")
 
 

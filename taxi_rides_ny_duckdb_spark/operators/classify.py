@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.parity import round_half_up_np
 from ..functions.text import tokenize
 
 from ..cache import scoped_persist
@@ -318,77 +319,6 @@ def auc_exact(
     )
 
 
-def _round9_half_up(x: float) -> float:
-    """SQL ROUND semantics at 9dp, matching BOTH engines exactly —
-    Python's built-in round() is banker's and would diverge.
-
-    ``Decimal(repr(x))``, NOT ``Decimal(x)`` (r13): at fractional
-    scales both engines round the SHORTEST decimal representation of
-    the double, not its exact binary expansion — Spark's Round is
-    ``BigDecimal.valueOf(x)`` (= ``Double.toString``, shortest
-    round-trip repr), and DuckDB measurably agrees (probed on
-    half-boundary witnesses). Witness: x = 0.1234567895 has exact
-    binary 0.12345678949999…, so exact-binary HALF_UP gives
-    0.123456789 where BOTH engines give 0.123456790; Python ``repr``
-    produces the same shortest round-trip digits as Java, so
-    ``Decimal(repr(x))`` reproduces them bit-for-bit. (The scale-0
-    integer kernels — round(t²·10¹²) etc. — are immune: k + 0.5 is
-    exactly representable below 2⁵², so the binary and shortest-repr
-    half-lines coincide there.) The exact-binary form survived 12
-    rounds of driver gates only because witnesses are ~10⁻⁴-rare; the
-    r13 one-pass grouped trainer surfaced one at sf0.1
-    (ext_semdedup_hier, cent_sim_r 0.448349374 vs …375)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(x)).quantize(Decimal("1e-9"), rounding=ROUND_HALF_UP)
-    )
-
-
-def _round12_half_up(x: float) -> float:
-    """SQL ROUND semantics at 12dp — the addend-scale (``_LOGP_DP``)
-    sibling of ``_round9_half_up``; see that docstring for why the
-    SHORTEST repr, not the exact binary expansion, is the
-    engine-faithful half-line."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(x)).quantize(Decimal("1e-12"), rounding=ROUND_HALF_UP)
-    )
-
-
-def _round12_half_up_np(v):
-    """Vectorized twin of ``_round12_half_up`` (the fused LR descent's
-    hot rounding: every per-row product, σ̃ value and gradient addend)
-    — same construction as ``similarity._round9_half_up_np``: the fast
-    path scales by 10¹² and splits on the fractional part; values
-    whose fraction lands inside an ambiguity band around 0.5 fall back
-    to the exact scalar form. Band soundness: the trainer's rounded
-    values are all |v| ≤ 1-ish by construction (x ∈ [0,1], σ̃ ∈ [0,1],
-    |err·x| ≤ 1), and anything |v| ≥ 2 routes slow, so both the ×10¹²
-    scaling error (≤ 2·10¹²·2⁻⁵² ≈ 4.4·10⁻⁴) and the repr-vs-binary
-    gap (≤ 10¹²·ulp(2)/2 ≈ 2.2·10⁻⁴) sit well inside the 10⁻³ band —
-    outside it the floor/half decisions are stable. Exactness is
-    grid-tested against the scalar form and Spark ``F.round``
-    (test_round12_vectorized_matches_scalar)."""
-    import numpy as np
-
-    a = np.abs(v)
-    scaled = a * 1e12
-    f = np.floor(scaled)
-    frac = scaled - f
-    ambiguous = np.abs(frac - 0.5) < 1e-3
-    ambiguous |= ~np.isfinite(scaled) | (a >= 2.0)
-    k = f + (frac >= 0.5)
-    out = np.copysign(k / 1e12, v)
-    if ambiguous.any():
-        idx = np.nonzero(ambiguous)[0]
-        vals = np.asarray(v, dtype=np.float64)
-        for i in idx:
-            out[i] = _round12_half_up(float(vals[i]))
-    return out
-
-
 # Below this many cached feature rows, GD iterations 2..iters run
 # INSIDE one applyInPandas task (``_lr_descent_fused``) instead of the
 # per-iteration driver-sync'd window+collect loop: each distributed
@@ -417,13 +347,13 @@ def _lr_descent_fused(
     (pinned by test_lr_train_fused_gate_matches_distributed):
 
     - per-row product ``round(x·w[idx], 12)`` via the repr-HALF_UP
-      twin ``_round12_half_up_np`` of ``F.round``;
+      twin ``round_half_up_np`` of ``F.round``;
     - per-doc z = the DECIMAL(38,12)-sum twin: addends recovered as
       exact scaled int64 (k = rint(v·10¹²) — |v| < 2 keeps the
       scaling error < 0.5, so recovery is exact), summed in int64,
       and the sum divided k/10¹² (correctly-rounded IEEE division of
       a < 2⁵³ integer ≡ the engine's exact-decimal→double cast);
-    - σ̃ and err: the identical IEEE double ops, then the round12 twin;
+    - σ̃ and err: the identical IEEE double ops, then the same twin;
     - per-idx gradient: the same int64-scaled decimal sum, converted
       through Python ``int / 10**12`` (correctly rounded even past
       2⁵³ — CPython int/int true division);
@@ -456,17 +386,19 @@ def _lr_descent_fused(
         wl = list(w0)
         for _ in range(rounds):
             warr = np.asarray(wl, dtype=np.float64)
-            prod = _round12_half_up_np(x * warr[idx])
+            prod = round_half_up_np(x * warr[idx], _LOGP_DP)
             zk = np.zeros(n_docs, dtype=np.int64)
             np.add.at(zk, codes, np.rint(prod * 1e12).astype(np.int64))
             z = zk[codes] / 1e12
-            p = _round12_half_up_np(0.5 + (0.5 * z) / (1.0 + np.abs(z)))
+            p = round_half_up_np(
+                0.5 + (0.5 * z) / (1.0 + np.abs(z)), _LOGP_DP
+            )
             err = p - y
             gk = np.zeros(d1, dtype=np.int64)
             np.add.at(
                 gk,
                 idx,
-                np.rint(_round12_half_up_np(err * x) * 1e12).astype(np.int64),
+                np.rint(round_half_up_np(err * x, _LOGP_DP) * 1e12).astype(np.int64),
             )
             g = [int(m) / 10**12 for m in gk]
             wl = [wl[i] - lrf * (g[i] / nf) for i in range(d1)]

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import scoped_persist
+from ..functions.parity import round_half_up
 
 # First 8 hex chars of md5 → 32-bit integer → uniform fraction. 2^32
 # buckets is plenty: split boundaries are exact to ~2.3e-10.
@@ -864,7 +865,7 @@ def temperature_mixture(
     one aggregation-bounded counts pass + the usual scan-CASE-filter
     projection — two scans, no data-sized shuffle."""
     import math
-    from decimal import ROUND_HALF_UP, Decimal
+    from decimal import Decimal
 
     if alpha < 0:
         raise ValueError(f"alpha must be >= 0, got {alpha}")
@@ -880,25 +881,18 @@ def temperature_mixture(
     if not counts:
         raise ValueError("no strata found")
 
-    def _round9(x: float) -> float:
-        # SQL ROUND, engine-faithful: both engines round the SHORTEST
-        # repr of the double, not its exact binary expansion — see
-        # classify._round9_half_up (r13) for the witness
-        return float(
-            Decimal(repr(x)).quantize(Decimal("1e-9"), rounding=ROUND_HALF_UP)
-        )
-
     pw = (
         (lambda n: math.sqrt(n))
         if alpha == 0.5
         else (lambda n: math.pow(n, alpha))
     )
-    weights = {s: _round9(pw(n)) for s, n in counts.items()}
+    weights = {s: round_half_up(pw(n), 9) for s, n in counts.items()}
     total = float(sum(Decimal(repr(w)) for w in weights.values()))  # exact sum
     shares = {s: w / total for s, w in weights.items()}
     n_out = min(counts[s] / share for s, share in shares.items())
     fractions = {
-        s: min(1.0, _round9(shares[s] * n_out / counts[s])) for s in shares
+        s: min(1.0, round_half_up(shares[s] * n_out / counts[s], 9))
+        for s in shares
     }
     return stratified_hash_sample(
         df, id_col, stratum_col, fractions, default_fraction=0.0, salt=salt

@@ -23,9 +23,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..session import ensure_min_partitions
-
 from ..cache import scoped_persist
+from ..functions.parity import round_half_up, round_half_up_np
+from ..session import ensure_min_partitions
 
 
 # ── E-step physical form: assign="auto" means arrow (r13 grid) ──
@@ -68,9 +68,16 @@ from ..cache import scoped_persist
 # kernels below (``_nearest_np``, ``_mstep_sums_np``, ``_lloyd_np``)
 # that the distributed Arrow E-/M-steps run too — bit-equal to BOTH
 # distributed E-step forms (pinned by tests), so the gate changes cost
-# only.
+# only. ``_fits_fused`` is the one place the bounds are checked.
 _FUSED_LLOYD_MAX_ROWS = 50_000
 _FUSED_LLOYD_MAX_CELLS = 2_000_000
+
+
+def _fits_fused(n: int, k: int) -> bool:
+    """The fused single-task gate: ``n`` rows against ``k`` centroids
+    per Lloyd pass fit one task. Reads the bounds at call time, so a
+    patched module constant takes effect."""
+    return n <= _FUSED_LLOYD_MAX_ROWS and n * k <= _FUSED_LLOYD_MAX_CELLS
 
 
 def _arrow_vec_col(df: DataFrame, vec_col: str) -> Column:
@@ -217,62 +224,6 @@ def _round_half_away_int(v: float) -> int:
     return f + (1 if v - f >= 0.5 else 0)
 
 
-def _round9_half_up_np(v):
-    """Vectorized twin of ``classify._round9_half_up`` (engine ROUND
-    at 9dp = HALF_UP on the SHORTEST repr of the double): the fast
-    path scales by 10⁹ and splits on the fractional part; values whose
-    fraction lands inside an ambiguity band around 0.5 (wider than the
-    worst float error of the ×10⁹ scaling, |frac−0.5| < 10⁻³) fall
-    back to the exact scalar Decimal(repr(x)) form — ~0.1% of uniform
-    inputs, so the Decimal cost disappears from the hot loop (the
-    grouped trainer's means are |leaf|·dim·iters values — 12.8M at
-    sf10). Sign is handled by symmetry (both engines round half AWAY
-    from zero; repr is sign-symmetric). Exactness is property-tested
-    against the scalar form and both engines
-    (test_round9_vectorized_matches_scalar)."""
-    import numpy as np
-
-    from .classify import _round9_half_up
-
-    a = np.abs(v)
-    scaled = a * 1e9
-    f = np.floor(scaled)
-    frac = scaled - f
-    ambiguous = np.abs(frac - 0.5) < 1e-3
-    # values too large for a meaningful 9dp fraction (≥ 2⁵³/1e9) are
-    # returned unchanged by the scalar form too — route them slow
-    ambiguous |= ~np.isfinite(scaled) | (a >= 2**53 / 1e9)
-    k = f + (frac >= 0.5)
-    out = np.copysign(k / 1e9, v)
-    if ambiguous.any():
-        idx = np.nonzero(ambiguous)[0]
-        vals = np.asarray(v, dtype=np.float64)
-        for i in idx:
-            out[i] = _round9_half_up(float(vals[i]))
-    return out
-
-
-def _round_dp_np(vals, dp: int):
-    """Numpy twin of engine ``F.round(x, dp)`` over a 1-D float64
-    array: the vectorized ``_round9_half_up_np`` at dp = 9, else the
-    scalar HALF_UP quantize of the shortest repr, which is what both
-    engines round at fractional scales."""
-    import numpy as np
-
-    if dp == 9:
-        return _round9_half_up_np(vals)
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q = Decimal(1).scaleb(-dp)
-    return np.array(
-        [
-            float(Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP))
-            for x in vals
-        ],
-        dtype=np.float64,
-    )
-
-
 # ── engine-exact k-means kernels ──
 # One copy of each, shared by every in-task Lloyd path (the fused
 # gates, the grouped trainers, the Arrow E-/M-steps, PQ encoding). The
@@ -370,27 +321,112 @@ def _lloyd_np(X, Xi, C, iters: int):
         # int64→double exact under the 2⁵³ envelope; /1e12 then /n are
         # the engine's own double divisions
         M = S.astype(np.float64) / 1e12 / npart[:, None]
-        C[uc] = _round9_half_up_np(M.ravel()).reshape(M.shape)
+        C[uc] = round_half_up_np(M, 9)
     return C, best, counts
 
 
 def _next_centroids(cents, stats):
     """Driver-side finish of a ``kmeans_lloyd`` M-step, shared by both
     E-step forms: coordinate j of centroid ci becomes
-    ``_round9_half_up(s/1e12/n)`` from its ``stats[(ci, j)] = (s, n)``
+    ``round_half_up(s/1e12/n, 9)`` from its ``stats[(ci, j)] = (s, n)``
     (Σ round(x·10¹²) and member count), and a coordinate without a
     statistic — an empty cluster — keeps its previous value."""
-    from .classify import _round9_half_up
-
     return [
         [
-            _round9_half_up(float(stats[ci, j][0]) / 1e12 / stats[ci, j][1])
+            round_half_up(float(stats[ci, j][0]) / 1e12 / stats[ci, j][1], 9)
             if (ci, j) in stats
             else x
             for j, x in enumerate(c)
         ]
         for ci, c in enumerate(cents)
     ]
+
+
+# ── engine-exact cosine kernels ──
+# One copy of each, shared by every in-task cosine path (near-dup
+# pairing, the SemDeDup collapse, the fused SemDeDup and hard-negative
+# paths). Every dot and sum of squares accumulates dim-SEQUENTIALLY —
+# the identical IEEE operation order as the engine's left-to-right
+# ``aggregate`` fold and the oracle's ``list_sum(list_transform)`` —
+# so each double is bit-equal to the expression form.
+
+
+def _fold_norms_np(X):
+    """Row L2 norms of ``X`` in the fold order: the sum of squares
+    accumulated dim-sequentially, then sqrt — bit-equal to
+    ``l2_norm``."""
+    import numpy as np
+
+    s = np.zeros(len(X))
+    for d in range(X.shape[1]):
+        s += X[:, d] * X[:, d]
+    return np.sqrt(s)
+
+
+def _cosine_np(dot, na, nb):
+    """``dot / (na·nb)`` with 0.0 where either norm is not positive —
+    ``cosine()``'s zero-norm convention. ``na`` and ``nb`` broadcast
+    against ``dot``."""
+    import numpy as np
+
+    ok = (na > 0) & (nb > 0)
+    return np.divide(dot, na * nb, out=np.zeros(np.shape(dot)), where=ok)
+
+
+def _row_cosine_np(A, B, na, nb):
+    """Cosine of row i of ``A`` with row i of ``B`` (a one-row ``A``
+    broadcasts): fold dot, then ``_cosine_np`` over the given norms."""
+    import numpy as np
+
+    dot = np.zeros(len(B))
+    for d in range(B.shape[1]):
+        dot += A[:, d] * B[:, d]
+    return _cosine_np(dot, na, nb)
+
+
+def _pair_cosine_blocks(X, nrm):
+    """Blocked upper-triangle pair cosine over the rows of ``X`` with
+    norms ``nrm``: yields ``(iu, ju, sim)`` for every 512-row block
+    pair with j-block ≥ i-block, where ``sim[a, b]`` is the cosine of
+    rows ``iu[a]`` and ``ju[b]``. The caller keeps ``iu < ju`` and
+    applies its own filter; the block size bounds the temporaries."""
+    import numpy as np
+
+    chunk = 512
+    n, dim = X.shape
+    for i0 in range(0, n, chunk):
+        A, na = X[i0 : i0 + chunk], nrm[i0 : i0 + chunk]
+        iu = np.arange(i0, i0 + len(A))
+        for j0 in range(i0, n, chunk):
+            B, nb = X[j0 : j0 + chunk], nrm[j0 : j0 + chunk]
+            acc = np.zeros((len(A), len(B)), dtype=np.float64)
+            for d in range(dim):
+                acc += A[:, d : d + 1] * B[:, d]
+            yield (
+                iu,
+                np.arange(j0, j0 + len(B)),
+                _cosine_np(acc, na[:, None], nb[None, :]),
+            )
+
+
+def _frozen_argmin_np(X, C, dp):
+    """Nearest frozen centroid under the rounded squared L2 of
+    ``assign_nearest_centroid``: per centroid the squared difference
+    accumulates dim-sequentially (its ``aggregate(zip_with(...))``
+    fold), is rounded through the ``F.round`` twin at ``dp`` (None:
+    unrounded), and NaN distances rank greatest (``array_min``'s
+    double ordering) via a +inf substitution; ``argmin``'s first
+    minimum is the struct ordering's ties-to-lower-cid. Returns
+    ``(D, assignment)`` with ``D`` the rounded (n, k) distances."""
+    import numpy as np
+
+    D = np.zeros((len(X), len(C)), dtype=np.float64)
+    for d in range(C.shape[1]):
+        t = X[:, d : d + 1] - C[:, d][None, :]
+        D += t * t
+    if dp is not None:
+        D = round_half_up_np(D, dp)
+    return D, np.where(np.isnan(D), np.inf, D).argmin(axis=1)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -970,12 +1006,9 @@ def embedding_near_dup_pairs(
     idt = dict(df.dtypes)[id_col]
     schema = f"id_a {idt}, id_b {idt}, cosine_sim double"
 
-    chunk = 512
-
     def fn(pdf):
         pdf = pdf.sort_values(id_col)
         ids = pdf[id_col].to_numpy()
-        n = len(pdf)
         empty = pd.DataFrame(
             {
                 "id_a": np.zeros(0, dtype=ids.dtype),
@@ -983,40 +1016,19 @@ def embedding_near_dup_pairs(
                 "cosine_sim": np.zeros(0, dtype=np.float64),
             }
         )
-        if n < 2:
+        if len(pdf) < 2:
             return empty
         X = _vec_matrix(pdf["__v"], dim)
-        nrm = np.zeros(n)
-        for d in range(dim):  # sequential over dims == fold order
-            nrm += X[:, d] * X[:, d]
-        nrm = np.sqrt(nrm)
         out_a, out_b, out_s = [], [], []
-        for i0 in range(0, n, chunk):
-            A, na = X[i0 : i0 + chunk], nrm[i0 : i0 + chunk]
-            iu = np.arange(i0, i0 + len(A))
-            for j0 in range(i0, n, chunk):
-                B, nb = X[j0 : j0 + chunk], nrm[j0 : j0 + chunk]
-                ju = np.arange(j0, j0 + len(B))
-                acc = np.zeros((len(A), len(B)), dtype=np.float64)
-                for d in range(dim):
-                    acc += A[:, d : d + 1] * B[:, d]
-                ok = (na[:, None] > 0) & (nb[None, :] > 0)
-                sim = np.where(
-                    ok,
-                    np.divide(
-                        acc, na[:, None] * nb[None, :],
-                        out=np.zeros_like(acc), where=ok,
-                    ),
-                    0.0,
-                )
-                ii, jj = np.nonzero(iu[:, None] < ju[None, :])
-                s = sim[ii, jj]
-                if dp is not None:
-                    s = _round_dp_np(s, dp)
-                keep = s >= thr
-                out_a.extend(ids[iu[ii[keep]]])
-                out_b.extend(ids[ju[jj[keep]]])
-                out_s.extend(s[keep])
+        for iu, ju, sim in _pair_cosine_blocks(X, _fold_norms_np(X)):
+            ii, jj = np.nonzero(iu[:, None] < ju[None, :])
+            s = sim[ii, jj]
+            if dp is not None:
+                s = round_half_up_np(s, dp)
+            keep = s >= thr
+            out_a.extend(ids[iu[ii[keep]]])
+            out_b.extend(ids[ju[jj[keep]]])
+            out_s.extend(s[keep])
         if not out_a:
             return empty
         return pd.DataFrame(
@@ -1454,24 +1466,13 @@ def hard_negative_mine_fused(
             )
         dim = len(C[0]) if C is not None else len(pdf[vec_col].iloc[0])
         X = _vec_matrix(pdf[vec_col], dim)
-        nv = np.zeros(n)
-        for d in range(dim):  # sequential over dims == fold order
-            nv += X[:, d] * X[:, d]
-        nv = np.sqrt(nv)
+        nv = _fold_norms_np(X)
         root, _keep = _collapse_cluster_np(
             ids, X if n >= 2 else None, nv, nv, thr, pdp
         )
         comp = ids[root]
         if C is not None:
-            kc = len(C)
-            D = np.zeros((n, kc), dtype=np.float64)
-            for d in range(dim):
-                t = X[:, d : d + 1] - C[:, d][None, :]
-                D += t * t
-            if qdp is not None:
-                for i in range(kc):
-                    D[:, i] = _round_dp_np(D[:, i], qdp)
-            clist = np.where(np.isnan(D), np.inf, D).argmin(axis=1)
+            D, clist = _frozen_argmin_np(X, C, qdp)
         out_q, out_r, out_i, out_s = [], [], [], []
         for qi in np.nonzero(isq)[0]:
             if C is not None:
@@ -1487,22 +1488,8 @@ def hard_negative_mine_fused(
                 cand = np.nonzero(comp != comp[qi])[0]
             if not len(cand):
                 continue
-            dot = np.zeros(len(cand))
-            B = X[cand]
-            for d in range(dim):
-                dot += X[qi, d] * B[:, d]
-            ok = (nv[qi] > 0) & (nv[cand] > 0)
-            sc = _round_dp_np(
-                np.where(
-                    ok,
-                    np.divide(
-                        dot,
-                        nv[qi] * nv[cand],
-                        out=np.zeros(len(cand)),
-                        where=ok,
-                    ),
-                    0.0,
-                ),
+            sc = round_half_up_np(
+                _row_cosine_np(X[qi][None, :], X[cand], nv[qi], nv[cand]),
                 sdp,
             )
             order = np.lexsort((ids[cand], -sc))[: int(k)]
@@ -1724,8 +1711,7 @@ def semdedup(
     Above the gate the distributed per-cluster path below is
     unchanged — one gate count is the only added job.
     """
-    n = df.count()
-    if n <= _FUSED_LLOYD_MAX_ROWS and n * len(centroids) <= _FUSED_LLOYD_MAX_CELLS:
+    if _fits_fused(df.count(), len(centroids)):
         return _semdedup_frozen_fused(
             df, centroids, threshold, id_col, vec_col, round_dp
         )
@@ -1768,8 +1754,9 @@ def _semdedup_frozen_fused(
 
     Bit-parity with the unfused chain, term by term (pinned by
     test_semdedup_frozen_fused_matches_unfused):
-    - assignment: per centroid i the squared-L2 accumulates
-      dim-SEQUENTIALLY (``D[:, i] += (x_d − c_d)²`` for d ascending) —
+    - assignment (``_frozen_argmin_np``, shared with
+      ``hard_negative_mine_fused``): per centroid i the squared-L2
+      accumulates dim-SEQUENTIALLY (``D[:, i] += (x_d − c_d)²`` for d ascending) —
       the identical IEEE order as ``assign_nearest_centroid``'s
       ``aggregate(zip_with(...))`` left fold; each distance is rounded
       through the ``F.round`` twin BEFORE the argmin, NaN distances
@@ -1781,8 +1768,9 @@ def _semdedup_frozen_fused(
       centroid norm from the SAME ``math.sqrt(sum(...))`` Python fold
       ``_pick_centroid_cosine`` embeds as a literal, zero-norm → 0.0,
       rounded through the ``F.round`` twin;
-    - collapse per cluster: ``_collapse_cluster_np`` — the SAME kernel
-      ``_semdedup_collapse`` runs.
+    - collapse per cluster: ``_collapse_clusters_np`` over
+      ``_collapse_cluster_np`` — the SAME kernel ``_semdedup_collapse``
+      runs.
     Vectors must be exactly dim-long (``_vec_matrix`` fails fast on
     NULL/ragged rows — the ADVICE r12 fail-fast contract — where the
     HOF folds would have degraded them to NULL/NaN scores).
@@ -1802,7 +1790,7 @@ def _semdedup_frozen_fused(
         [math.sqrt(sum(float(x) * float(x) for x in c)) for c in centroids],
         dtype=np.float64,
     )
-    k, dim = C.shape
+    dim = C.shape[1]
 
     dtypes = dict(df.dtypes)
     idt = dtypes[id_col]
@@ -1814,44 +1802,11 @@ def _semdedup_frozen_fused(
     def fn(pdf):
         pdf = pdf.sort_values(id_col)
         ids = pdf[id_col].to_numpy()
-        n = len(pdf)
         X = _vec_matrix(pdf["__v"], dim)
-        D = np.zeros((n, k), dtype=np.float64)
-        for d in range(dim):  # sequential over dims == fold order
-            t = X[:, d : d + 1] - C[:, d][None, :]
-            D += t * t
-        for i in range(k):  # _round_dp_np is 1-D
-            D[:, i] = _round_dp_np(D[:, i], dp)
-        a = np.where(np.isnan(D), np.inf, D).argmin(axis=1)
-        CA = C[a]
-        nv = np.zeros(n)
-        dot_vc = np.zeros(n)
-        for d in range(dim):
-            nv += X[:, d] * X[:, d]
-            dot_vc += X[:, d] * CA[:, d]
-        nv = np.sqrt(nv)
-        cna = cn[a]
-        ok = (nv > 0) & (cna > 0)
-        sims = _round_dp_np(
-            np.where(
-                ok, np.divide(dot_vc, nv * cna, out=np.zeros(n), where=ok), 0.0
-            ),
-            dp,
-        )
-        component = np.empty(n, dtype=ids.dtype)
-        keep = np.zeros(n, dtype=bool)
-        for ci in np.unique(a):
-            idx = np.nonzero(a == ci)[0]  # id-ascending within cluster
-            root, kp = _collapse_cluster_np(
-                ids[idx],
-                X[idx] if len(idx) >= 2 else None,
-                nv[idx],
-                sims[idx],
-                thr,
-                dp,
-            )
-            component[idx] = ids[idx][root]
-            keep[idx] = kp
+        _D, a = _frozen_argmin_np(X, C, dp)
+        nv = _fold_norms_np(X)
+        sims = round_half_up_np(_row_cosine_np(X, C[a], nv, cn[a]), dp)
+        component, keep = _collapse_clusters_np(ids, X, nv, sims, a, thr, dp)
         return pd.DataFrame(
             {
                 id_col: ids,
@@ -1870,13 +1825,11 @@ def _semdedup_frozen_fused(
     return v0.groupBy("__g").applyInPandas(fn, schema)
 
 
-def _collapse_cluster_np(
-    ids, X, nrm, sims, thr: float, dp: int, chunk: int = 512
-):
+def _collapse_cluster_np(ids, X, nrm, sims, thr: float, dp: int):
     """One cluster's pairing + transitive closure + keep rule — the
-    in-task kernel shared by ``_semdedup_collapse`` and
-    ``_semdedup_tower_fused`` (r13; extracted verbatim so the two
-    fused paths cannot drift). ``ids`` MUST be sorted ascending (index
+    in-task kernel shared by ``_semdedup_collapse``, the fused SemDeDup
+    paths (through ``_collapse_clusters_np``) and
+    ``hard_negative_mine_fused``. ``ids`` MUST be sorted ascending (index
     order == id order, so the index mask replays ``id_a < id_b``);
     ``X`` may be None for singleton clusters. Returns ``(root, keep)``
     — root[i] is the component representative's LOCAL INDEX (min index
@@ -1900,38 +1853,19 @@ def _collapse_cluster_np(
         return r
 
     if n >= 2 and X is not None:
-        dim = X.shape[1]
-        for i0 in range(0, n, chunk):
-            A, na = X[i0 : i0 + chunk], nrm[i0 : i0 + chunk]
-            iu = np.arange(i0, i0 + len(A))
-            for j0 in range(i0, n, chunk):
-                B, nb = X[j0 : j0 + chunk], nrm[j0 : j0 + chunk]
-                ju = np.arange(j0, j0 + len(B))
-                acc = np.zeros((len(A), len(B)), dtype=np.float64)
-                for d in range(dim):  # sequential over dims == fold order
-                    acc += A[:, d : d + 1] * B[:, d]
-                ok = (na[:, None] > 0) & (nb[None, :] > 0)
-                sim = np.where(
-                    ok,
-                    np.divide(
-                        acc, na[:, None] * nb[None, :],
-                        out=np.zeros_like(acc), where=ok,
-                    ),
-                    0.0,
-                )
-                mask = (sim >= margin) & (iu[:, None] < ju[None, :])
-                ii, jj = np.nonzero(mask)
-                if not len(ii):
+        for iu, ju, sim in _pair_cosine_blocks(X, nrm):
+            ii, jj = np.nonzero((sim >= margin) & (iu[:, None] < ju[None, :]))
+            if not len(ii):
+                continue
+            hit = round_half_up_np(sim[ii, jj], dp) >= thr
+            for a, b in zip(iu[ii[hit]], ju[jj[hit]]):
+                ra, rb = find(int(a)), find(int(b))
+                if ra == rb:
                     continue
-                hit = _round_dp_np(sim[ii, jj], dp) >= thr
-                for a, b in zip(iu[ii[hit]], ju[jj[hit]]):
-                    ra, rb = find(int(a)), find(int(b))
-                    if ra == rb:
-                        continue
-                    if ra < rb:
-                        parent[rb] = ra
-                    else:
-                        parent[ra] = rb
+                if ra < rb:
+                    parent[rb] = ra
+                else:
+                    parent[ra] = rb
     root = np.fromiter((find(i) for i in range(n)), dtype=np.int64, count=n)
     order = np.lexsort((ids, sims))
     keep = np.zeros(n, dtype=bool)
@@ -1942,6 +1876,26 @@ def _collapse_cluster_np(
             seen.add(r)
             keep[i] = True
     return root, keep
+
+
+def _collapse_clusters_np(ids, X, nrm, sims, labels, thr: float, dp: int):
+    """``_collapse_cluster_np`` over every cluster of ``labels`` in one
+    task (the fused SemDeDup paths): ``ids`` sorted ascending, so each
+    cluster's index subset is id-ascending too. Returns ``(component,
+    keep)`` per row — component is the min member id."""
+    import numpy as np
+
+    component = np.empty(len(ids), dtype=ids.dtype)
+    keep = np.zeros(len(ids), dtype=bool)
+    for ci in np.unique(labels):
+        idx = np.nonzero(labels == ci)[0]
+        root, kp = _collapse_cluster_np(
+            ids[idx], X[idx] if len(idx) >= 2 else None,
+            nrm[idx], sims[idx], thr, dp,
+        )
+        component[idx] = ids[idx][root]
+        keep[idx] = kp
+    return component, keep
 
 
 def _semdedup_collapse(
@@ -1973,8 +1927,8 @@ def _semdedup_collapse(
     - the margin prefilter at ``threshold − 10^−round_dp`` is a sound
       superset (dp-rounding moves a value < 10^−dp) and the EXACT
       filter ``round(dot/(na·nb), dp) ≥ threshold`` is applied via the
-      property-tested ``_round9_half_up_np`` twin of ``F.round``
-      (scalar ``Decimal(repr(x))`` quantize for dp ≠ 9);
+      property-tested ``round_half_up_np`` twin of ``F.round`` at every
+      dp;
     - components: union-find attaching the larger root under the
       smaller, so the representative is the min member id —
       ``connected_components``' documented contract; edge-untouched
@@ -2120,33 +2074,28 @@ def semdedup_auto(
                 levels += 1
         if levels < 2:
             raise ValueError(f"levels must be >= 2, got {levels}")
-        return _semdedup_multilevel(
-            df, n, target_cluster_size, nlist, threshold, id_col, vec_col,
-            iters, round_dp, levels,
-        )
-    if n <= _FUSED_LLOYD_MAX_ROWS and n * nlist <= _FUSED_LLOYD_MAX_CELLS:
-        # fused flat path (r13 optimization round, guide §2.4/§1.2):
-        # the WHOLE operator — init+train+assign (in-task k = ⌈n/T⌉ ≡
-        # nlist, init = first-nlist-by-id, the _lloyd_rounds_np kernel
-        # bit-equal to kmeans_lloyd), the own-centroid scoring AND the
-        # pair/closure/keep collapse — as one task
-        # (_semdedup_tower_fused with levels=1). Gate constants
-        # documented at their definition.
+    else:
+        levels = 1
+    if _fits_fused(n, _int_ceil_root(nlist, levels)):
+        # fused path (r13 optimization round, guide §2.4/§1.2): the
+        # WHOLE operator — init+train+assign at every level (in-task
+        # k = ⌈n/T⌉ ≡ nlist when flat, init = first-k-by-id, the
+        # _lloyd_rounds_np kernel bit-equal to kmeans_lloyd), the
+        # own-centroid scoring AND the pair/closure/keep collapse — as
+        # one task. The gate bounds the widest Lloyd pass, the coarse
+        # one: n rows against nlist^(1/L) centroids.
         return _semdedup_tower_fused(
-            df, int(target_cluster_size), 1, threshold,
+            df, int(target_cluster_size), levels, threshold,
             id_col, vec_col, iters, round_dp,
         )
-    init = [
-        [float(x) for x in r["__cv"]]
-        for r in df.select(
-            F.col(id_col), _as_double_array(F.col(vec_col)).alias("__cv")
+    if levels > 1:
+        return _semdedup_multilevel(
+            df, target_cluster_size, nlist, threshold, id_col, vec_col,
+            iters, round_dp, levels,
         )
-        .orderBy(id_col)
-        .limit(nlist)
-        .collect()
-    ]
     cents, _sizes = kmeans_lloyd(
-        df, init, id_col=id_col, vec_col=vec_col, iters=iters, assign="arrow"
+        df, "first_k", id_col=id_col, vec_col=vec_col, iters=iters,
+        assign="arrow", k=nlist,
     )
     v = ensure_min_partitions(df).select(
         F.col(id_col),
@@ -2263,8 +2212,9 @@ def _semdedup_tower_fused(
     - cent_sim_r: sequential-fold dot and norms (== the engine's
       ``l2_norm``/``cosine_given_norms`` fold order), zero-norm → 0.0,
       rounded through the ``F.round`` twin;
-    - collapse per leaf: ``_collapse_cluster_np`` — the SAME kernel
-      ``_semdedup_collapse`` runs.
+    - collapse per leaf: ``_collapse_clusters_np`` over
+      ``_collapse_cluster_np`` — the SAME kernel ``_semdedup_collapse``
+      runs.
 
     Above the gate callers keep the distributed per-level passes —
     this path serializes the split levels' numpy through one worker,
@@ -2315,36 +2265,12 @@ def _semdedup_tower_fused(
                 leaf_cv = [cents[p] for p in sorted(node_list)]
         # own-centroid cosine: sequential-fold dot/norms == the engine
         # l2_norm / cosine_given_norms fold order, zero-norm -> 0.0
-        dim = X.shape[1]
         CV = np.asarray(leaf_cv, dtype=np.float64)[leaf]
-        nv = np.zeros(n)
-        ncv = np.zeros(n)
-        dot_vc = np.zeros(n)
-        for d in range(dim):
-            nv += X[:, d] * X[:, d]
-            ncv += CV[:, d] * CV[:, d]
-            dot_vc += X[:, d] * CV[:, d]
-        nv, ncv = np.sqrt(nv), np.sqrt(ncv)
-        ok = (nv > 0) & (ncv > 0)
-        sims = _round_dp_np(
-            np.where(
-                ok,
-                np.divide(dot_vc, nv * ncv, out=np.zeros(n), where=ok),
-                0.0,
-            ),
-            dp,
+        nv = _fold_norms_np(X)
+        sims = round_half_up_np(
+            _row_cosine_np(X, CV, nv, _fold_norms_np(CV)), dp
         )
-        # collapse per leaf cluster — the _semdedup_collapse kernel
-        component = np.empty(n, dtype=np.int64)
-        keep = np.zeros(n, dtype=bool)
-        for lf in np.unique(leaf):
-            idx = np.nonzero(leaf == lf)[0]
-            root, kp = _collapse_cluster_np(
-                ids[idx], X[idx] if len(idx) >= 2 else None,
-                nv[idx], sims[idx], thr, dp,
-            )
-            component[idx] = ids[idx][root]
-            keep[idx] = kp
+        component, keep = _collapse_clusters_np(ids, X, nv, sims, leaf, thr, dp)
         return pd.DataFrame(
             {
                 id_col: ids,
@@ -2369,7 +2295,6 @@ def _semdedup_tower_fused(
 
 def _semdedup_multilevel(
     df: DataFrame,
-    n: int,
     target_cluster_size: int,
     nlist: int,
     threshold: float,
@@ -2417,46 +2342,23 @@ def _semdedup_multilevel(
     Ties and determinism: argmin ties to the lower node id at every
     level, init = first-k-by-id within each node — re-runs are
     layout-independent."""
-    b1 = _int_ceil_root(nlist, levels)
     t = int(target_cluster_size)
-    if n <= _FUSED_LLOYD_MAX_ROWS and n * b1 <= _FUSED_LLOYD_MAX_CELLS:
-        # fused tower (r13 optimization round, guide §2.4/§1.2): below
-        # the gate the WHOLE tower — coarse training, every split
-        # level, densification, own-centroid scoring and the collapse
-        # — runs as one task (_semdedup_tower_fused; the per-level
-        # fused passes each still cost a scheduled exchange + Arrow
-        # pass + persist + densify window). Gate constants documented
-        # at their definition; above them the distributed per-level
-        # loop below keeps the win (sf10 towers).
-        return _semdedup_tower_fused(
-            df, t, levels, threshold, id_col, vec_col, iters, round_dp
-        )
-    else:
-        init = [
-            [float(x) for x in r["__cv"]]
-            for r in df.select(
-                F.col(id_col), _as_double_array(F.col(vec_col)).alias("__cv")
-            )
-            .orderBy(id_col)
-            .limit(b1)
-            .collect()
-        ]
-        coarse, _sizes = kmeans_lloyd(
-            df, init, id_col=id_col, vec_col=vec_col, iters=iters,
-            assign="arrow",
-        )
-        v = ensure_min_partitions(df).select(
-            F.col(id_col), _as_double_array(F.col(vec_col)).alias("__v")
-        )
-        # branch assignment: one more E-step with the final coarse
-        # centroids, with the vector CARRIED through the Arrow batch
-        # (r13 optimization round) — the corpus-sized join back to ``v``
-        # on id is gone, and since each level is now ONE fused pass with
-        # a single consumer, the per-level repartition+persist pair is
-        # gone too (the fused groupBy does the one bid exchange itself).
-        vecs = kmeans_assign_arrow(
-            v, coarse, id_col, vec_col="__v", carry_vec=True
-        ).withColumnRenamed("cid", "bid")
+    coarse, _sizes = kmeans_lloyd(
+        df, "first_k", id_col=id_col, vec_col=vec_col, iters=iters,
+        assign="arrow", k=_int_ceil_root(nlist, levels),
+    )
+    v = ensure_min_partitions(df).select(
+        F.col(id_col), _as_double_array(F.col(vec_col)).alias("__v")
+    )
+    # branch assignment: one more E-step with the final coarse
+    # centroids, with the vector CARRIED through the Arrow batch
+    # (r13 optimization round) — the corpus-sized join back to ``v``
+    # on id is gone, and since each level is now ONE fused pass with
+    # a single consumer, the per-level repartition+persist pair is
+    # gone too (the fused groupBy does the one bid exchange itself).
+    vecs = kmeans_assign_arrow(
+        v, coarse, id_col, vec_col="__v", carry_vec=True
+    ).withColumnRenamed("cid", "bid")
     cents = None
     members = None
     for ell in range(2, levels + 1):
@@ -2611,11 +2513,10 @@ def _kmeans_lloyd_fused(
     first_k_k: int | None = None,
 ) -> tuple[list[list[float]], dict[int, int]]:
     """Single-task Lloyd trainer — the fused-gate body of
-    ``kmeans_lloyd(assign='auto')`` below ``_FUSED_LLOYD_MAX_ROWS`` /
-    ``_FUSED_LLOYD_MAX_CELLS`` (constants documented at definition):
+    ``kmeans_lloyd(assign='auto')`` where ``_fits_fused`` admits it:
     ONE applyInPandas job runs every iteration in-task with the shared
     ``_lloyd_np`` kernel (scaled-int64 E-step, argmin ties to the lower
-    cid, round(x·10¹²) LONG M-step addends, ``_round9_half_up_np``
+    cid, round(x·10¹²) LONG M-step addends, ``round_half_up_np``
     means, empty clusters carrying their previous centroid) and emits
     (cid, cv, n_assigned) — bit-identical centroids AND sizes to the
     distributed loop (sizes = the LAST iteration's M-step assignment
@@ -2801,15 +2702,9 @@ def kmeans_lloyd(
         # fused-M-step passes run the same training in ~3 s).
         n = df.count()
         k0 = k if first_k else len(init_centroids)
-        if (
-            n <= _FUSED_LLOYD_MAX_ROWS
-            and n * k0 <= _FUSED_LLOYD_MAX_CELLS
-            and (
-                first_k
-                or not any(
-                    len(c) != len(init_centroids[0]) for c in init_centroids
-                )
-            )
+        if _fits_fused(n, k0) and (
+            first_k
+            or not any(len(c) != len(init_centroids[0]) for c in init_centroids)
         ):
             # fused single-task gate (r13 optimization round): every
             # iteration's job + driver sync collapses into ONE
@@ -3196,7 +3091,7 @@ def kmeans_lloyd_grouped(
     int64 sums, argmin ties to the lower scid), M-step (per-(scid, j)
     round(x·10¹²) LONG sums + counts; means = exact 9dp HALF_UP on
     the identical double ``float(s)/1e12/n`` the engine's
-    ``F.round(s/1e12/n, 9)`` rounds — ``_round9_half_up``, the same
+    ``F.round(s/1e12/n, 9)`` rounds — ``round_half_up``, the same
     driver twin ``kmeans_lloyd``'s arrow path already oracles), empty
     sub-clusters carrying their previous centroid whole. The old form
     ran E and M as one cogroup PER ITERATION stitched by
@@ -3303,7 +3198,7 @@ def kmeans_train_assign_grouped(
     by id (== the window form's orderBy(id) rn ≤ k); all Lloyd
     iterations verbatim ``kmeans_lloyd_grouped`` arithmetic
     (scaled-int64 E-step with argmin ties to the lower scid,
-    round(x·10¹²) LONG M-step addends, ``_round9_half_up_np`` means,
+    round(x·10¹²) LONG M-step addends, ``round_half_up_np`` means,
     empty sub-clusters carrying their previous centroid); then ONE
     final E-step with the trained centroids (== what
     ``kmeans_assign_grouped`` recomputed from the checkpoint).
@@ -4475,15 +4370,16 @@ def mmr_topk(
         # the per-round anti-join/union lineage and k rounds of
         # Catalyst re-optimization collapse into ONE Arrow pass.
         # Bit-exactness, term by term: round-1 score = F.round(rel,9)
-        # == _round9_half_up_np (the proven repr-HALF_UP twin); later
-        # scores = round9(lam·rel − (1−lam)·ms) where the inner
+        # == round_half_up_np(rel, 9) (the proven repr-HALF_UP twin);
+        # later scores = round9(lam·rel − (1−lam)·ms) where the inner
         # expression is the same two IEEE double ops the engine's
         # literals produce (incl. 1.0−0.7 = 0.30000000000000004) and
         # ms = max over selected of the SAME __sim doubles the pair
         # frame carries; argmax ties to the lower id, all comparisons
-        # exact double compares. Only available at 9dp — the dp the
-        # exact vectorized kernel covers (and the only dp any caller
-        # uses); other dp values keep the unrolled plan below.
+        # exact double compares. 9dp is the only dp any caller uses;
+        # other dp values keep the unrolled plan below, which stays as
+        # the reference test_mmr_fused_greedy_matches_unrolled_plan
+        # pins this path against.
         import numpy as np
         import pandas as pd
 
@@ -4523,11 +4419,9 @@ def mmr_topk(
                 if not remaining.any():
                     break
                 if t == 1:
-                    sc = _round9_half_up_np(rel)
+                    sc = round_half_up_np(rel, 9)
                 else:
-                    sc = _round9_half_up_np(
-                        lam_f * rel - (1.0 - lam_f) * ms
-                    )
+                    sc = round_half_up_np(lam_f * rel - (1.0 - lam_f) * ms, 9)
                 sc_m = np.where(remaining, sc, -np.inf)
                 top = np.nonzero(remaining & (sc_m == sc_m.max()))[0]
                 wsel = top[np.argmin(ids[top])]

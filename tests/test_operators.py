@@ -4005,6 +4005,8 @@ def test_semdedup_auto_fused_gates_match_unfused(spark, monkeypatch):
         dict(target_cluster_size=8, threshold=0.9),                 # flat
         dict(target_cluster_size=4, threshold=0.9,
              max_flat_nlist=0, levels=2),                           # L2 tower
+        dict(target_cluster_size=2, threshold=0.9,
+             max_flat_nlist=0, levels=3),                           # L3 tower
     ):
         fused = rowset(S.semdedup_auto(df, iters=2, **kwargs))
         monkeypatch.setattr(S, "_FUSED_LLOYD_MAX_ROWS", 0)
@@ -4750,48 +4752,89 @@ def test_adc_topk_names_null_codes(spark, op, bad):
         out.collect()
 
 
-def test_round9_vectorized_matches_scalar(spark):
-    """The vectorized round9 twin (_round9_half_up_np) equals the
-    scalar Decimal(repr(x)) form — which is the engine-faithful one
-    (both engines round the SHORTEST repr at fractional scales, r13)
-    — on half-boundary witnesses, the ambiguity band, signs, and a
-    random grid; plus a Spark F.round spot-check on the witnesses."""
+@pytest.mark.parametrize("dp", [9, 12])
+def test_round_half_up_vectorized_matches_scalar(spark, dp):
+    """The vectorized twin (round_half_up_np) equals the scalar
+    Decimal(repr(x)) form (round_half_up) — which is the engine-faithful
+    one (Spark rounds the SHORTEST repr at fractional scales, r13) — on
+    half-boundary witnesses, the ambiguity band, signs, the slow-route
+    edge and random grids, plus a dp 0–12 grid up to |v| = 1e9 with
+    near-half lattice points; and a Spark F.round spot-check on the
+    witnesses. The four large 9dp witnesses sit past the old fast
+    path's exactness bound, where it came out one unit low."""
     import numpy as np
 
     from pyspark.sql import functions as F
 
-    from taxi_rides_ny_duckdb_spark.operators.classify import _round9_half_up
-    from taxi_rides_ny_duckdb_spark.operators.similarity import (
-        _round9_half_up_np,
+    from taxi_rides_ny_duckdb_spark.functions.parity import (
+        round_half_up,
+        round_half_up_np,
     )
 
-    witnesses = [
-        0.1234567895,        # repr says ...895, exact binary ...89499...
-        0.4483493745,        # the r13 sf0.1 incident's class
-        0.9999999985,
-        0.0000000005,
-        0.5000000005,
-        0.4483493744999999,
-        0.44834937450000004,
-        1.0, 0.0, -0.0, 2.5e-10, -2.5e-10, 123.4567890125,
-        -0.1234567895, -0.9999999985,
-    ]
-    rng = np.random.default_rng(7)
-    grid = np.concatenate([
+    witnesses = {
+        9: [
+            0.1234567895,        # repr says ...895, exact binary ...89499...
+            0.4483493745,        # the r13 sf0.1 incident's class
+            0.9999999985,
+            0.0000000005,
+            0.5000000005,
+            0.4483493744999999,
+            0.44834937450000004,
+            1.0, 0.0, -0.0, 2.5e-10, -2.5e-10, 123.4567890125,
+            -0.1234567895, -0.9999999985,
+            # |v|·1e9 ≥ 2⁴¹: Spark gives …615/…177/…529/…077
+            67479.6965756145, 69529.9063791765,
+            557207.5627365285, 524357.6728050765,
+        ],
+        12: [
+            0.1234567890125,      # repr half-line at 12dp
+            0.4999999999995,
+            0.0000000000005,
+            0.9999999999985,
+            0.1234567890124999,
+            0.12345678901250001,
+            1.0, 0.0, -0.0, 2.5e-13, -2.5e-13,
+            3.1234567890125,      # |v|·1e12 ≥ 2⁴¹: the scalar slow route
+            -0.1234567890125, -0.9999999999985,
+        ],
+    }[dp]
+    rng = np.random.default_rng({9: 7, 12: 12}[dp])
+    grid = [
         np.asarray(witnesses, dtype=np.float64),
         rng.uniform(-2.0, 2.0, 4000),
-        rng.uniform(-1e-8, 1e-8, 1000),
+        rng.uniform(-(10.0 ** (1 - dp)), 10.0 ** (1 - dp), 1000),
         # dense sampling right at the half-boundary lattice
-        (np.arange(-500, 500) + 0.5) / 1e9,
-    ])
-    got = _round9_half_up_np(grid)
-    want = np.asarray([_round9_half_up(float(x)) for x in grid])
+        (np.arange(-500, 500) + 0.5) / 10**dp,
+    ]
+    if dp == 12:
+        # the slow-route edge: |v| ≥ 2⁴¹/1e12 ≈ 2.2 routes slow
+        u = rng.uniform(2.0, 4.0, 2000)
+        grid += [u, -u, (np.floor(u * 1e12) + 0.5) / 1e12]
+    grid = np.concatenate(grid)
+    got = round_half_up_np(grid, dp)
+    want = np.asarray([round_half_up(float(x), dp) for x in grid])
     mism = np.nonzero(got != want)[0]
-    assert len(mism) == 0, [(float(grid[i]), float(got[i]), float(want[i])) for i in mism[:5]]
+    assert len(mism) == 0, [
+        (float(grid[i]), float(got[i]), float(want[i])) for i in mism[:5]
+    ]
+    # every dp 0–12, magnitudes up to 1e9, random and near-half values
+    for d in range(13):
+        mag = 10.0 ** rng.uniform(-d - 1, 9, 3000)
+        sweep = np.concatenate([
+            mag * rng.choice([-1.0, 1.0], len(mag)),
+            (np.floor(mag * 10**d) + 0.5) / 10**d,
+        ])
+        got = round_half_up_np(sweep, d)
+        want = np.asarray([round_half_up(float(x), d) for x in sweep])
+        mism = np.nonzero(got != want)[0]
+        assert len(mism) == 0, [
+            (d, float(sweep[i]), float(got[i]), float(want[i]))
+            for i in mism[:5]
+        ]
     # engine spot-check on the witnesses (F.round is the house target)
     df = spark.createDataFrame([(float(w),) for w in witnesses], "v double")
-    eng = [r["r"] for r in df.select(F.round(F.col("v"), 9).alias("r")).collect()]
-    vec = _round9_half_up_np(np.asarray(witnesses, dtype=np.float64))
+    eng = [r["r"] for r in df.select(F.round(F.col("v"), dp).alias("r")).collect()]
+    vec = round_half_up_np(np.asarray(witnesses, dtype=np.float64), dp)
     assert [float(x) for x in vec] == eng
 
 
@@ -5453,50 +5496,6 @@ def test_semdedup_collapse_matches_scalar_replica(spark):
     assert got[4]["component"] == 4 and got[4]["keep"]
     assert got[10]["component"] == got[11]["component"] == 10
     assert (got[10]["keep"], got[11]["keep"]) == (False, True)
-
-
-def test_round12_vectorized_matches_scalar(spark):
-    """The vectorized round12 twin (_round12_half_up_np) equals the
-    scalar Decimal(repr(x)) form on half-boundary witnesses, the
-    ambiguity band, signs, the >= 2 slow route and a random grid;
-    plus a Spark F.round spot-check (the engine target of the fused
-    LR descent's addend rounding)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from taxi_rides_ny_duckdb_spark.operators.classify import (
-        _round12_half_up,
-        _round12_half_up_np,
-    )
-
-    witnesses = [
-        0.1234567890125,      # repr half-line at 12dp
-        0.4999999999995,
-        0.0000000000005,
-        0.9999999999985,
-        0.1234567890124999,
-        0.12345678901250001,
-        1.0, 0.0, -0.0, 2.5e-13, -2.5e-13,
-        3.1234567890125,      # >= 2: the scalar slow route
-        -0.1234567890125, -0.9999999999985,
-    ]
-    rng = np.random.default_rng(12)
-    grid = np.concatenate([
-        np.asarray(witnesses, dtype=np.float64),
-        rng.uniform(-2.0, 2.0, 4000),
-        rng.uniform(-1e-11, 1e-11, 1000),
-        (np.arange(-500, 500) + 0.5) / 1e12,
-    ])
-    got = _round12_half_up_np(grid)
-    want = np.asarray([_round12_half_up(float(x)) for x in grid])
-    mism = np.nonzero(got != want)[0]
-    assert len(mism) == 0, [
-        (float(grid[i]), float(got[i]), float(want[i])) for i in mism[:5]
-    ]
-    df = spark.createDataFrame([(float(w),) for w in witnesses], "v double")
-    eng = [r["r"] for r in df.select(F.round(F.col("v"), 12).alias("r")).collect()]
-    vec = _round12_half_up_np(np.asarray(witnesses, dtype=np.float64))
-    assert [float(x) for x in vec] == eng
 
 
 def test_lr_train_fused_gate_matches_distributed(spark, monkeypatch):
