@@ -29,6 +29,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import per_session
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -37,16 +39,6 @@ ORACLES: dict[str, str] = {}
 # (an already-executed DataFrame's adaptive plan string includes both
 # initial and final plans, breaking operator-count assertions).
 BUILDERS: dict[str, QueryFn] = {}
-
-# Built logical plans, keyed by (query, session, sf_dir). DataFrames are
-# immutable and lazy, so handing the same object back is semantically a
-# re-run — this is exactly dbt's view materialization (the compiled
-# plan persists; every query re-executes it). It matters for timing
-# honesty too: expression-heavy plans (e.g. IVF centroid rankings)
-# cost ~1 s of py4j round trips to BUILD, which would otherwise be
-# billed to every execution, while the DuckDB baseline re-parses a SQL
-# string in microseconds.
-_PLANS: dict[tuple, DataFrame] = {}
 
 
 def query(
@@ -62,19 +54,15 @@ def query(
         if name in QUERIES:
             raise ValueError(f"duplicate contract query {name!r}")
         BUILDERS[name] = fn
-        if memoize:
-
-            def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-                key = (name, id(spark), sf_dir)
-                if key not in _PLANS:
-                    _PLANS[key] = fn(spark, sf_dir)
-                return _PLANS[key]
-
-            cached.__name__ = fn.__name__
-            cached.__doc__ = fn.__doc__
-            QUERIES[name] = cached
-        else:
-            QUERIES[name] = fn
+        # Plan reuse per (session, sf_dir). DataFrames are immutable and
+        # lazy, so handing the same object back is semantically a re-run
+        # — exactly dbt's view materialization (the compiled plan
+        # persists; every query re-executes it). It matters for timing
+        # honesty too: expression-heavy plans (e.g. IVF centroid
+        # rankings) cost ~1 s of py4j round trips to BUILD, which would
+        # otherwise be billed to every execution, while the DuckDB
+        # baseline re-parses a SQL string in microseconds.
+        QUERIES[name] = per_session(fn) if memoize else fn
         if oracle is not None:
             ORACLES[name] = oracle
         return fn
@@ -224,61 +212,6 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "ext_cdc_apply",
     "ext_corpus_shuffle",
 )
-
-# ROUND-12 drawing (superseded -- kept for the audit trail):
-_DRIVER_WINDOW_R12: tuple[str, ...] = (
-    "taxi_stg_green_tripdata",
-    "taxi_stg_yellow_tripdata",
-    "taxi_dim_zones",
-    "taxi_fact_trips",
-    "taxi_dm_monthly_zone_revenue",
-    "taxi_dm_monthly_zone_statistics",
-    "taxi_metric_average_distance_month",
-    "taxi_metric_avg_distance_manhattan_quarter",
-    "ext_kmeans_train",
-    "ext_semdedup_auto",
-    "ext_semdedup_hier",
-    "ext_semdedup_hier3",
-    "ext_pq_topk",
-    "ext_pq_recall",
-    "ext_ivfpq_topk",
-    "ext_ivfpq_recall",
-    "ext_ann_recall_eval",
-    "ext_retrieval_ranking_quality",
-    "ext_binary_hamming_topk",
-    "ext_binary_hamming_rerank",
-    "ext_binary_hamming_recall",
-    "ext_embedding_mean_pool",
-    "ext_mixture_sample_tokens",
-    "ext_partitioned_sink_prune",
-    "ext_quality_robust_normalize",
-    "ext_quantile_binning",
-    "ext_similarity_ivf_topk",
-    "ext_streaming_dedup",
-    "ext_streaming_stateful_totals",
-    "ext_text_chunk_windows",
-    "ext_text_regex_redact",
-    "ext_vocab_coverage",
-    "j6_outer_join_count_dist",
-    "prof_lineitem_approx_guarded",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q15_top_supplier",
-    "q18_large_volume_customers",
-    "q20_part_promo_suppliers",
-    "q22_dormant_customers",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_type_profit",
-    "s6_correlated_subquery",
-    "a5_metric_avg_month",
-    "a5_metric_rolling_avg_7d",
-    "a6_unique_violations",
-)
-
 
 def load_all() -> None:
     """Import every module that registers contract queries, then rotate

@@ -520,7 +520,7 @@ def brute_force_topk_int64(
     """Exact top-k under the SCALED-INT64 cosine metric — the
     blocked-numpy Arrow twin of ``brute_force_topk`` for ground-truth
     production (VERDICT r10 task 2: the interpreted zip_with/aggregate
-    fold was ~the whole cost of every ``_GT_INDEX`` build and the
+    fold was ~the whole cost of every ground-truth index build and the
     ranking-quality certification; the ``kmeans_assign_arrow``
     precedent measured this exact switch at 4.7×).
 
@@ -2146,34 +2146,6 @@ def _int_ceil_root(x: int, r: int) -> int:
     return b
 
 
-def _iceil_root_col(m: Column, r: int) -> Column:
-    """Column form of ``_int_ceil_root`` over a BIGINT column: float
-    pow/sqrt gives an estimate within ±1 of the true floor root (for
-    the ≤2⁴⁰-ish values a node count can reach), and two integer CASE
-    corrections (down, then up) pin the exact floor root before the
-    final ceil step — so the result is EXACT integer math in any
-    engine, replayable by the same CASE chain in SQL. r=1 returns m
-    (the final level's ⌈cnt/T⌉ is already the child count)."""
-    if r == 1:
-        return m
-
-    def p(x: Column) -> Column:
-        e = x
-        for _ in range(r - 1):
-            e = e * x
-        return e
-
-    est = F.floor(F.pow(m.cast("double"), 1.0 / r)).cast("long")
-    d1 = F.when(p(est) > m, est - 1).otherwise(est)
-    d2 = F.when(p(d1) > m, d1 - 1).otherwise(d1)
-    u1 = F.when(p(d2 + 1) <= m, d2 + 1).otherwise(d2)
-    flo = F.when(p(u1 + 1) <= m, u1 + 1).otherwise(u1)
-    return F.greatest(
-        F.lit(1).cast("long"),
-        F.when(p(flo) >= m, flo).otherwise(flo + 1),
-    )
-
-
 def _semdedup_tower_fused(
     df: DataFrame,
     t_target: int,
@@ -2365,10 +2337,11 @@ def _semdedup_multilevel(
         s = levels - ell + 1  # remaining splits including this one
         # ONE fused init+train+assign pass per level (r13 optimization
         # round — see kmeans_train_assign_grouped): the window-built
-        # init frame (whose _iceil_root_col CASE chain cost 1.5-2.6 s
-        # of per-run interpreted fallback at sf0.1), the train cogroup,
-        # its eager checkpoint and the second corpus-wide assignment
-        # cogroup collapse into a single Arrow pass. Persisted: the
+        # init frame (whose column form of _int_ceil_root, a CASE
+        # chain, cost 1.5-2.6 s of per-run interpreted fallback at
+        # sf0.1), the train cogroup, its eager checkpoint and the
+        # second corpus-wide assignment cogroup collapse into a single
+        # Arrow pass. Persisted: the
         # centroid-row and member-row branches both read it.
         fused = kmeans_train_assign_grouped(
             vecs, t, s, id_col=id_col, vec_col="__v", group_col="bid",
@@ -3185,10 +3158,10 @@ def kmeans_train_assign_grouped(
     the grouped-train cogroup, its eager checkpoint AND the second
     corpus-wide assignment cogroup — the vectors cross the Python
     boundary once per level instead of twice, and the init frame's
-    exact-integer-root CASE chain (``_iceil_root_col`` — a cascaded
-    expression Janino refuses to compile, measured 1.5–2.6 s of
-    per-run interpreted fallback + replanning at sf0.1) never enters
-    a plan at all.
+    exact-integer-root CASE chain (a column form of
+    ``_int_ceil_root`` — a cascaded expression Janino refuses to
+    compile, measured 1.5–2.6 s of per-run interpreted fallback +
+    replanning at sf0.1) never enters a plan at all.
 
     A task holds its whole group, so everything runs in-task with the
     house engine-exact kernels, bit-identical to the frames it fuses:

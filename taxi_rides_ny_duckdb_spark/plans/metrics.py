@@ -94,10 +94,6 @@ def compile_metric(model: DataFrame, metric: Metric, grain: str) -> DataFrame:
     return df.groupBy(*keys).agg(agg)
 
 
-def compile_all_grains(model: DataFrame, metric: Metric) -> dict[str, DataFrame]:
-    return {g: compile_metric(model, metric, g) for g in metric.time_grains}
-
-
 # Map a truncated period (DATE) to a contiguous integer index so a
 # RANGE frame of N periods is exact even when periods are missing from
 # the data (a ROWS frame would silently span gaps). 1969-12-29 is the

@@ -16,6 +16,7 @@ scale:
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -60,6 +61,22 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def per_session(fn):
+    """Memoize ``fn(spark, *args)`` for the life of the session: the
+    dbt view/index rule that derived state is built once and every
+    consumer in the session reads it.
+
+    The key is ``(spark, *args)`` with the SparkSession object itself
+    first. The memo holds the session strongly, so a stopped session's
+    key can never be reused by a new one (an ``id()`` key can be
+    recycled and hand out localCheckpointed frames whose blocks died
+    with the old executors), and a lookup costs no py4j call.
+    ``spark.newSession()`` is a distinct object with its own entries.
+    ``functools.cache`` keys positional calls on exactly that tuple
+    (SparkSession hashes by identity) and keeps ``__name__``/``__doc__``."""
+    return functools.cache(fn)
 
 
 def ensure_min_partitions(

@@ -21,6 +21,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import per_session
+
 # Driver-generated tables (TESTDATA.md): TPC-H-ish star schema + events
 # stream + LLM-pipeline extension tables.
 TESTDATA_TABLES: tuple[str, ...] = (
@@ -41,14 +43,10 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# (session id, path) → scan DataFrame. A DataFrame is an immutable
-# logical plan, safe to reuse across queries; building one costs a
-# parquet-footer read + schema inference (~50-100 ms of py4j + IO) that
-# a session running dozens of contract queries should pay once per
-# table, not once per query.
-_SCANS: dict[tuple[int, str], DataFrame] = {}
-
-
+# Scans are memoized per session: building one costs a parquet-footer
+# read + schema inference (~50-100 ms of py4j + IO) that a session
+# running dozens of contract queries should pay once per table.
+@per_session
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one logical table (reference S1 analog).
 
@@ -65,9 +63,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown source table {name!r}; known: {TESTDATA_TABLES}")
-    key = (id(spark), table_path(sf_dir, name))
-    if key in _SCANS:
-        return _SCANS[key]
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         from pyspark.sql import functions as F
@@ -83,7 +78,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     else:
         df = spark.read.parquet(table_path(sf_dir, name))
-    _SCANS[key] = df
     return df
 
 
@@ -115,24 +109,13 @@ def read_source(
     return reader.load(path)
 
 
-# (session id, view name) → registered path. Registering a view costs a
-# parquet-footer read + py4j round trips (~0.1 s/table); a session that
-# runs many SQL queries over the same sf_dir should pay it once.
-_REGISTERED: dict[tuple[int, str], str] = {}
-
-
 def register_all(
     spark: SparkSession, sf_dir: str, tables: tuple[str, ...] | None = None
 ) -> None:
     """Register tables as temp views for the SQL API. Pass ``tables``
-    to register a subset — each registration reads a parquet footer, so
-    a query touching 3 tables shouldn't pay for 10. Idempotent per
-    (session, sf_dir): re-registers only when sf_dir changes."""
-    sid = id(spark)
+    to register a subset — a query touching 3 tables shouldn't pay for
+    10. ``load`` is memoized per session, so re-registering costs one
+    ``createOrReplaceTempView`` and no footer read."""
     for name in tables or TESTDATA_TABLES:
-        path = table_path(sf_dir, name)
-        if _REGISTERED.get((sid, name)) == path:
-            continue
-        if os.path.exists(path):
+        if os.path.exists(table_path(sf_dir, name)):
             load(spark, sf_dir, name).createOrReplaceTempView(name)
-            _REGISTERED[(sid, name)] = path

@@ -98,3 +98,43 @@ def test_two_operator_pipeline_leaves_no_orphan_cache_entries(spark):
         assert n_pairs >= 0 and n_sel > 0
         assert _storage_count(spark) > base, "operators should have persisted"
     assert _storage_count(spark) == base, "scope exit must drop all registrations"
+
+
+def test_per_session_memo_rule(spark, sf_dir):
+    """``session.per_session`` keys on (session object, *args): a
+    memoized contract query and a source scan hand back the same object
+    within a session while the unmemoized builder does not, each
+    distinct argument tuple builds once, and ``spark.newSession()``
+    gets its own entries."""
+    from taxi_rides_ny_duckdb_spark import contract
+    from taxi_rides_ny_duckdb_spark.session import per_session
+    from taxi_rides_ny_duckdb_spark.sources.registry import load
+
+    contract.load_all()
+    name = "s1_scan_filter_project"
+    q, b = contract.QUERIES[name], contract.BUILDERS[name]
+    assert q(spark, sf_dir) is q(spark, sf_dir)
+    assert b(spark, sf_dir) is not b(spark, sf_dir)
+    assert load(spark, sf_dir, "orders") is load(spark, sf_dir, "orders")
+    assert load(spark, sf_dir, "orders") is not load(spark, sf_dir, "lineitem")
+
+    calls = []
+
+    @per_session
+    def build(s, a, tag):
+        """Build marker."""
+        calls.append((a, tag))
+        return object()
+
+    assert (build.__name__, build.__doc__) == ("build", "Build marker.")
+    first = build(spark, 1, "x")
+    assert build(spark, 1, "x") is first
+    assert build(spark, 2, "x") is not first
+    assert calls == [(1, "x"), (2, "x")]
+
+    other = spark.newSession()
+    assert build(other, 1, "x") is not first
+    assert build(other, 1, "x") is build(other, 1, "x")
+    assert calls == [(1, "x"), (2, "x"), (1, "x")]
+    assert load(other, sf_dir, "orders") is not load(spark, sf_dir, "orders")
+    assert q(other, sf_dir) is not q(spark, sf_dir)

@@ -12,11 +12,11 @@ whose body (or transitive callees) reaches a seed.
 Over-approximates on name collisions (two functions sharing a name) —
 acceptable: a false stale costs one redundant driver slot, a missed
 stale costs a wrong green row. EXCEPTION: ubiquitous closure/harness
-names (``fn``, ``deco``, ``cached``, ``query``…) are excluded from
+names (``fn``, ``deco``, ``query``…) are excluded from
 propagation entirely — the operator modules name their Arrow-batch
 closures ``fn``, and contract.py's registrar wraps every builder
-through ``fn``/``cached``, so one stale closure would otherwise mark
-all 226 queries stale through a pure name collision (measured: seeding
+through ``fn``, so one stale closure would otherwise mark all 226
+queries stale through a pure name collision (measured: seeding
 _round9_half_up alone flagged 226 queries via
 a1_pricing_summary → query → fn). Edits inside those closures are
 covered by seeding their ENCLOSING operator function instead, which is
@@ -37,7 +37,7 @@ PKG = os.path.join(ROOT, "taxi_rides_ny_duckdb_spark")
 # names that appear as closures/wrappers in dozens of files — never
 # propagate staleness through a bare-name match on these (see module
 # docstring)
-STOP_NAMES = {"fn", "deco", "cached", "query", "p", "_w", "wrapper"}
+STOP_NAMES = {"fn", "deco", "query", "p", "_w", "wrapper"}
 
 
 def _call_edges(tree: ast.AST, modname: str):
